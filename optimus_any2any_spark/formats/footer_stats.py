@@ -53,6 +53,7 @@ from zoneinfo import ZoneInfo
 from pyspark.sql import types as T
 
 __all__ = [
+    "file_stats",
     "footer_file_stats",
     "kind_of_spark_type",
     "kind_of_iceberg_type",
@@ -216,7 +217,7 @@ def footer_file_stats(
     for path in paths:
         local = path[7:] if path.startswith("file://") else path
         try:
-            md = pq.ParquetFile(local).metadata
+            md = pq.read_metadata(local)
         except Exception:
             return None
         rows = int(md.num_rows)
@@ -268,4 +269,59 @@ def footer_file_stats(
         except ValueError:
             return None
         out[os.path.basename(local)] = st
+    return out
+
+
+def file_stats(
+    spark,
+    paths: list[str],
+    stat_cols: list[str],
+    kinds: dict,
+    schema: T.StructType | None = None,
+) -> dict[str, dict]:
+    """Per-file stats of just-written parquet files, in
+    ``footer_file_stats``' shape: from the footers when every value is
+    provably exact, else from ONE grouped Spark aggregate over all the
+    files (``schema``, when given, spares that read its inference job).
+    Both paths key files by basename, omit zero-row files and
+    canonicalize float zeros, so callers cannot tell them apart; each
+    table format encodes the result into its own metadata. An
+    unreadable footer falls back too: the aggregate then either
+    answers or fails the commit before anything is published."""
+    from pyspark.sql import functions as F
+
+    ft = footer_file_stats(
+        paths,
+        stat_cols,
+        kinds,
+        session_tz=spark.conf.get("spark.sql.session.timeZone", "UTC"),
+    )
+    if ft is not None:
+        return ft
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    frame = reader.parquet(*paths)
+    if stat_cols:
+        frame = frame.select(*stat_cols)
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    for i, c in enumerate(stat_cols):
+        aggs += [
+            F.min(c).alias(f"__mn{i}"),
+            F.max(c).alias(f"__mx{i}"),
+            F.sum(F.col(c).isNull().cast("long")).alias(f"__nn{i}"),
+        ]
+    out: dict[str, dict] = {}
+    for r in (
+        frame.withColumn("__f", F.input_file_name())
+        .groupBy("__f")
+        .agg(*aggs)
+        .collect()
+    ):
+        st: dict = {"rows": int(r["rows"]), "min": {}, "max": {}, "nulls": {}}
+        for i, c in enumerate(stat_cols):
+            mn = norm_float_zero(r[f"__mn{i}"])
+            if mn is not None:
+                st["min"][c] = mn
+                st["max"][c] = norm_float_zero(r[f"__mx{i}"])
+            st["nulls"][c] = int(r[f"__nn{i}"])
+        out[r["__f"].rsplit("/", 1)[-1]] = st
     return out

@@ -437,54 +437,6 @@ def iceberg_spark_schema(meta: dict) -> T.StructType:
     )
 
 
-def snapshot_data_files(
-    table_path: str, meta: dict, snapshot_id: int | None = None
-) -> list[str]:
-    """Live data-file paths of a snapshot (status != DELETED), with
-    row-level deletes rejected, not ignored."""
-    snaps = meta.get("snapshots") or []
-    if snapshot_id is None:
-        snapshot_id = meta.get("current-snapshot-id")
-    if snapshot_id is None or snapshot_id == -1 or not snaps:
-        return []
-    snap = next(
-        (s for s in snaps if s["snapshot-id"] == snapshot_id), None
-    )
-    if snap is None:
-        raise ValueError(
-            f"iceberg: snapshot {snapshot_id} not in table metadata"
-        )
-    if "manifest-list" in snap:
-        _, manifests = read_container(
-            _localize(table_path, snap["manifest-list"])
-        )
-    else:  # v1 inline manifest path list
-        manifests = [
-            {"manifest_path": p, "content": 0}
-            for p in snap.get("manifests", [])
-        ]
-    out: list[str] = []
-    for m in manifests:
-        if int(m.get("content") or 0) == 1:
-            raise NotImplementedError(
-                "iceberg: delete manifests (row-level deletes) are "
-                "beyond this reader — refusing to resurrect rows"
-            )
-        _, entries = read_container(
-            _localize(table_path, m["manifest_path"])
-        )
-        for e in entries:
-            if int(e.get("status") or 0) == _STATUS_DELETED:
-                continue
-            df = e["data_file"]
-            if int(df.get("content") or 0) != 0:
-                raise NotImplementedError(
-                    "iceberg: delete data files are beyond this reader"
-                )
-            out.append(_localize(table_path, df["file_path"]))
-    return out
-
-
 def _snapshot_entries(
     table_path: str, meta: dict, snapshot_id: int | None = None
 ) -> tuple[list[dict], list[dict], list[dict]]:
@@ -3292,8 +3244,6 @@ def write_iceberg_commit(
     # zero Spark jobs.
     add_part_fields: list[tuple[str, str, str]] = []  # (pname, src, type)
     if add_files is not None:
-        import pyarrow.parquet as _pq
-
         from optimus_any2any_spark.streaming.iceberg_table import (
             _AVRO_PRIM,
         )
@@ -3380,7 +3330,6 @@ def write_iceberg_commit(
                     )
                 add_part_fields.append((nm, nm, t))
         data_rel = []
-        counts = {}
         add_pvals: dict[str, dict[str, object]] = {}  # basename → tuple
         # collision guard spans the files ALREADY in the table too:
         # stats/delete joins key files by basename, so a second
@@ -3403,7 +3352,6 @@ def write_iceberg_commit(
                 )
             seen_bn.add(bn)
             data_rel.append(ap)
-            counts[bn] = int(_pq.read_metadata(ap).num_rows)
             if add_part_fields:
                 add_pvals[bn] = _hive_partition_values(
                     ap, add_part_fields
@@ -3419,26 +3367,25 @@ def write_iceberg_commit(
             os.replace(part, os.path.join(table_path, rel))
             data_rel.append(rel)
         shutil.rmtree(tmp)
-        # per-file row counts come from the parquet FOOTERS (pyarrow,
-        # driver-side, O(footer) I/O) — the old shape re-read every
-        # just-written file through Spark (a schema-INFERENCE job plus
-        # a full groupBy(input_file_name) scan, i.e. O(written bytes)
-        # of extra read per commit; the add_files branch above always
-        # used footers). Only record_count feeds the manifest entries.
-        import pyarrow.parquet as _wpq
+    # per-file row counts (the only stat the manifest entries carry
+    # here) come from the parquet FOOTERS — O(footer) driver-side I/O,
+    # no Spark job — with one grouped Spark count as the fallback when
+    # a footer is unreadable; zero-row files are absent from the stats
+    from optimus_any2any_spark.formats.footer_stats import file_stats
 
-        counts = {
-            os.path.basename(r): int(
-                _wpq.read_metadata(
-                    os.path.join(table_path, r)
-                ).num_rows
-            )
-            for r in data_rel
-        }
+    counts = {
+        name: st["rows"]
+        for name, st in file_stats(
+            spark,
+            [os.path.join(table_path, r) for r in data_rel],
+            [],
+            {},
+        ).items()
+    }
     # an empty frame (e.g. the partitioned-table bootstrap) still
     # writes one zero-row part file — drop it rather than listing a
     # rowless entry in the manifest
-    empty = [r for r in data_rel if counts[os.path.basename(r)] == 0]
+    empty = [r for r in data_rel if counts.get(os.path.basename(r), 0) == 0]
     for r in empty:
         if add_files is None:  # registered foreign files are NOT ours
             os.remove(os.path.join(table_path, r))

@@ -1,13 +1,12 @@
 """File-level MERGE upsert committing the open Delta log protocol.
 
-VERDICT r3 item 4's documented end state: the copy-on-write MERGE that
-``manifest_table.py`` proves out against a hand-rolled JSON manifest,
-re-targeted at a REAL table format — the Delta Lake transaction log
-(delta.io protocol; no delta-spark jar exists in this environment, so
-the commits are written directly, and ``sources/delta.py`` replays
-them). The reference has no MERGE at all (its warehouse sink is
-APPEND/REPLACE only, ext/maxcompute/sink.go:171), so this whole layer
-is beyond-reference — SURVEY.md §7.
+The copy-on-write MERGE committed to a REAL table format — the Delta
+Lake transaction log (delta.io protocol; no delta-spark jar exists in
+this environment, so the commits are written directly, and
+``sources/delta.py`` replays them). The reference has no MERGE at
+all (its warehouse sink is APPEND/REPLACE only,
+ext/maxcompute/sink.go:171), so this whole layer is beyond-reference
+— SURVEY.md §7.
 
 Protocol mapping (manifest concept → Delta action):
 
@@ -26,8 +25,9 @@ bounded replay            parquet checkpoint + ``_last_checkpoint``
                           every ``checkpoint_interval`` commits
 ==========================================================
 
-MERGE(batch) — copy-on-write at FILE granularity, same algorithm as
-``manifest_table.merge_batch``:
+MERGE(batch) — copy-on-write at FILE granularity; steps 2-4 are the
+shared core in ``streaming/cow_merge.py`` (the Iceberg and manifest
+tables run the same code):
 
 1. idempotence: if the log's ``txn`` state already covers
    (app_id, batch_id), return without touching anything;
@@ -69,15 +69,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from optimus_any2any_spark.formats.footer_stats import (
+# footer_file_stats stays importable from this module for callers that
+# reach the footer reader through it
+from optimus_any2any_spark.formats.footer_stats import (  # noqa: F401
+    file_stats,
     footer_file_stats,
-    norm_float_zero,
     kind_of_spark_type,
 )
 from optimus_any2any_spark.sources.delta import _log_dir, replay_log
-from optimus_any2any_spark.streaming.manifest_table import (
-    _MAX_DRIVER_KEYS,
-    _affected,
+from optimus_any2any_spark.streaming.cow_merge import (
+    MAX_DRIVER_KEYS,
+    affected,
+    apply_insert_clauses,
+    apply_merge_clauses,
+    batch_key_stats,
+    dedupe_latest,
+    pid_lookup,
+    route,
+    route_files,
+    upsert,
+    validate_merge_clauses,
+    with_zorder_value,
+    write_by_pid,
 )
 
 DEFAULT_APP_ID = "optimus-any2any-merge"
@@ -227,6 +240,43 @@ def _file_token(table_path: str) -> str:
     import uuid
 
     return uuid.uuid5(uuid.NAMESPACE_URL, table_path).hex[:8]
+
+
+def _write_cdc(
+    table_path: str, version: int, changes: DataFrame, cols: list[str],
+    pfields,
+) -> list[dict]:
+    """Publish one commit's change rows (``cols`` + ``_change_type``)
+    under ``_change_data/``; returns their ``cdc`` actions. CDC parquet
+    carries physical names on column-mapped tables, like data files."""
+    out = changes.select(*cols, "_change_type")
+    if pfields is not None:
+        out = _to_phys(out, list(cols), pfields, keep=("_change_type",))
+    cdc_tmp = os.path.join(table_path, f"_tmp-cdc-v{version}")
+    out.write.mode("overwrite").parquet(cdc_tmp)
+    os.makedirs(os.path.join(table_path, "_change_data"), exist_ok=True)
+    actions = []
+    for i, part in enumerate(
+        sorted(_glob.glob(os.path.join(cdc_tmp, "part-*.parquet")))
+    ):
+        rel = f"_change_data/cdc-{version:05d}-{i:04d}.parquet"
+        full = os.path.join(table_path, rel)
+        _put_data(part, full)
+        if os.path.getsize(full) == 0:
+            os.remove(full)
+            continue
+        actions.append(
+            {
+                "cdc": {
+                    "path": rel,
+                    "partitionValues": {},
+                    "size": os.path.getsize(full),
+                    "dataChange": False,
+                }
+            }
+        )
+    shutil.rmtree(cdc_tmp)
+    return actions
 
 
 def _read_files_dv_aware(
@@ -542,8 +592,8 @@ def _remove_action(path: str, add: dict, data_change: bool) -> dict:
 
 
 def _entry_from_add(path: str, add: dict, key_col: str) -> dict:
-    """Map a Delta add action to the manifest-table pruning entry shape
-    so ``_affected`` (the shared file-pruning rule) applies verbatim."""
+    """Map a Delta add action to the shared pruning entry shape so
+    ``cow_merge.affected`` (the file-pruning rule) applies verbatim."""
     raw = add.get("stats")
     try:
         st = json.loads(raw) if isinstance(raw, str) else (raw or {})
@@ -580,15 +630,6 @@ def _entry_from_add(path: str, add: dict, key_col: str) -> dict:
     }
 
 
-def _stats_json(rows: int, key_col: str, kmin, kmax, n_null: int) -> str:
-    st: dict = {"numRecords": rows, "minValues": {}, "maxValues": {},
-                "nullCount": {key_col: n_null}}
-    if kmin is not None:
-        st["minValues"][key_col] = kmin
-        st["maxValues"][key_col] = kmax
-    return json.dumps(st, default=str)
-
-
 _MAX_STAT_COLS = 8  # real Delta records the first 32; 8 keeps the
 #                     footer scan cheap while covering typical filters
 
@@ -606,12 +647,8 @@ def _collect_file_stats(
     is what makes ``read_delta(key_range=...)`` skip files on ANY
     recorded column, not just the merge key.
 
-    Fast path: parquet FOOTER statistics via pyarrow, driver-side —
-    zero data I/O over files this commit just wrote (re-reading every
-    byte of merge output for stats would double write-path I/O at
-    100 TB merge throughput). Falls back to one grouped Spark
-    aggregate whenever any footer value is not provably identical
-    (``formats/footer_stats.py`` documents the exactness contract)."""
+    The values come from ``footer_stats.file_stats`` (parquet footers,
+    one grouped Spark aggregate as the fallback)."""
     orderable = (
         T.NumericType, T.StringType, T.DateType, T.TimestampType,
         T.TimestampNTZType, T.BooleanType,
@@ -627,62 +664,67 @@ def _collect_file_stats(
         if f.name not in lead and isinstance(f.dataType, orderable)
     ][: max(0, _MAX_STAT_COLS - len(lead))]
     type_of = {f.name: f.dataType for f in data_schema.fields}
-    ft = footer_file_stats(
-        [os.path.join(table_path, r) for r in new_rel],
-        stat_cols,
-        {c: kind_of_spark_type(type_of[c]) for c in stat_cols if c in type_of}
-        if all(c in type_of for c in stat_cols)
-        else {},
-        session_tz=spark.conf.get("spark.sql.session.timeZone", "UTC"),
-    )
-    if ft is not None:
-        return {
-            name: {
-                "numRecords": s["rows"],
-                "minValues": s["min"],
-                "maxValues": s["max"],
-                "nullCount": s["nulls"],
-            }
-            for name, s in ft.items()
+    kinds = {
+        c: kind_of_spark_type(type_of[c]) for c in stat_cols if c in type_of
+    }
+    return {
+        name: {
+            "numRecords": st["rows"],
+            "minValues": st["min"],
+            "maxValues": st["max"],
+            "nullCount": st["nulls"],
         }
-    aggs = [F.count(F.lit(1)).alias("rows")]
-    for c in stat_cols:
-        aggs += [
-            F.min(c).alias(f"__mn_{c}"),
-            F.max(c).alias(f"__mx_{c}"),
-            F.sum(F.col(c).isNull().cast("long")).alias(f"__nn_{c}"),
-        ]
-    per_file = (
-        # explicit schema: the files were written with data_schema this
-        # commit — inferring it back costs one extra footer-reading job
-        # per fallback trigger
-        spark.read.schema(data_schema)
-        .parquet(*[os.path.join(table_path, r) for r in new_rel])
-        .select(*stat_cols)
-        .withColumn("__f", F.input_file_name())
-        .groupBy("__f")
-        .agg(*aggs)
-        .collect()
-    )
-    out: dict[str, dict] = {}
-    for r in per_file:
-        st: dict = {
-            "numRecords": int(r["rows"]),
-            "minValues": {},
-            "maxValues": {},
-            "nullCount": {},
+        for name, st in file_stats(
+            spark,
+            [os.path.join(table_path, r) for r in new_rel],
+            stat_cols,
+            kinds,
+            schema=data_schema,
+        ).items()
+    }
+
+
+def _add_actions(
+    table_path: str,
+    files: list[tuple[str, dict]],
+    by_name: dict[str, dict],
+    version: int,
+    rt_base: int | None,
+    data_change: bool,
+    stats_collected: bool = True,
+) -> list[dict]:
+    """``add`` actions for a commit's new ``(rel, partitionValues)``
+    files, with ``by_name`` their stats. A file without stats held no
+    rows and is deleted instead — unless no stats were collected at
+    all. Under row tracking (``rt_base`` = the first free row id) each
+    add reserves record-count fresh ids from the watermark (rows with
+    materialized ids leave theirs unused — the spec only needs
+    uniqueness), and the advanced high-watermark domain action closes
+    the list."""
+    actions: list[dict] = []
+    for rel, pv in files:
+        full = os.path.join(table_path, rel)
+        st = by_name.get(rel)
+        if st is None and stats_collected:
+            os.remove(full)
+            continue
+        add = {
+            "path": rel,
+            "partitionValues": pv,
+            "size": os.path.getsize(full),
+            "modificationTime": 0,
+            "dataChange": data_change,
         }
-        for c in stat_cols:
-            mn, mx = (
-                norm_float_zero(r[f"__mn_{c}"]),
-                norm_float_zero(r[f"__mx_{c}"]),
-            )
-            if mn is not None:
-                st["minValues"][c] = mn
-                st["maxValues"][c] = mx
-            st["nullCount"][c] = int(r[f"__nn_{c}"])
-        out[r["__f"].rsplit("/", 1)[-1]] = st
-    return out
+        if st is not None:
+            add["stats"] = json.dumps(st, default=str)
+            if rt_base is not None:
+                add["baseRowId"] = rt_base
+                add["defaultRowCommitVersion"] = version
+                rt_base += int(st["numRecords"])
+        actions.append({"add": add})
+    if rt_base is not None:
+        actions.append(_rt_domain_action(rt_base - 1))
+    return actions
 
 
 def _posix_put_if_absent(tmp: str, final: str) -> bool:
@@ -1332,85 +1374,6 @@ def vacuum_delta(spark: SparkSession, table_path: str) -> list[str]:
     return gone
 
 
-def _with_zorder_value(
-    cur: DataFrame, zorder_by: list[str], data_schema: T.StructType
-) -> DataFrame:
-    """Append a ``__zv`` Morton (Z-curve) key: per column, the value
-    maps to a QUANTILE bucket (one ``approxQuantile`` sample job for
-    ALL columns — never a global sort per dimension), and the bucket
-    ids' bits interleave into one long. Range-partitioning the write
-    on ``__zv`` then gives every output file a compact hyper-rectangle
-    of the value space, so a filter on ANY z-ordered column (not just
-    the leading one — linear clustering's blind spot) prunes ~N^(1-1/d)
-    of N files via the ordinary min/max stats. The whole computation
-    is Column arithmetic inside codegen; nulls sort to bucket 0.
-
-    Total bit budget 12 (4096 z-cells), split evenly — beyond ~4
-    columns the curve degrades like real Z-ORDER does, which is the
-    honest behavior to inherit."""
-    ncols = len(zorder_by)
-    bits = max(1, 12 // ncols)
-    n_buckets = 1 << bits
-    type_of = {f.name: f.dataType for f in data_schema.fields}
-
-    def _as_double(c: str):
-        dt = type_of[c]
-        if isinstance(dt, T.NumericType):
-            return F.col(c).cast("double")
-        if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-            return F.col(c).cast("double")
-        if isinstance(dt, T.DateType):
-            return F.col(c).cast("timestamp").cast("double")
-        raise NotImplementedError(
-            f"delta optimize: ZORDER BY over {dt.simpleString()} "
-            f"column {c!r} is beyond this writer (numeric / "
-            "timestamp / date only)"
-        )
-
-    qcols = [f"__zq{i}" for i in range(ncols)]
-    zsrc = cur.select(
-        *[_as_double(c).alias(q) for c, q in zip(zorder_by, qcols)]
-    )
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    all_bounds = zsrc.approxQuantile(qcols, probs, 0.001)
-    zdf = cur
-    for c, q, bounds in zip(zorder_by, qcols, all_bounds):
-        zdf = zdf.withColumn(q, _as_double(c))
-        # drop duplicate quantiles (skewed data); the bucket id is the
-        # count of distinct bounds strictly below the value. Built as
-        # ONE aggregate over an array literal instead of a chain of
-        # n_buckets when()/otherwise() Columns: the old shape cost ~4
-        # py4j round-trips per bound (~2,000 per ZORDER call, ~0.4 s of
-        # pure driver latency) and produced an expression tree whose
-        # analysis cost scaled with the bucket count. Null values yield
-        # null comparisons -> IF takes the else branch -> bucket 0,
-        # exactly as the when-chain did.
-        dedup: list[float] = []
-        for bd in bounds:
-            if not dedup or bd != dedup[-1]:
-                dedup.append(bd)
-        if dedup:
-            b = F.aggregate(
-                F.lit(dedup),
-                F.lit(0),
-                lambda acc, x: acc
-                + F.when(F.col(q) > x, 1).otherwise(0),
-            )
-        else:
-            b = F.lit(0)
-        zdf = zdf.withColumn(q, b.cast("long"))
-    zv = F.lit(0).cast("long")
-    for bit in range(bits):
-        for j, q in enumerate(qcols):
-            zv = zv.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(F.col(q), bit).bitwiseAND(F.lit(1)),
-                    bit * ncols + j,
-                )
-            )
-    return zdf.withColumn("__zv", zv).drop(*qcols)
-
-
 def compact_delta(
     spark: SparkSession,
     table_path: str,
@@ -1473,7 +1436,6 @@ def compact_delta(
             groups.setdefault(key, []).append((p, a))
     version = state["version"] + 1
     actions: list[dict] = []
-    file_seq = 0
     # lead stats (and re-clustering) with the caller's merge key when
     # given, else the first data column
     stat_col = key_col or (
@@ -1523,26 +1485,13 @@ def compact_delta(
     if single:
         cur = cur.withColumn("__pid", F.lit(0).cast("int"))
     else:
-        bn_src = [(p.rsplit("/", 1)[-1], pid) for p, pid in src]
-        if len({b for b, _ in bn_src}) != len(bn_src):
-            raise NotImplementedError(
-                "delta optimize: compacted files share a basename — "
-                "the pid routing join would misattribute rows"
-            )
-        rel_pid = local_rows_df(spark, 
-            bn_src,
-            T.StructType(
-                [
-                    T.StructField("__rel", T.StringType(), False),
-                    T.StructField("__pid", T.IntegerType(), False),
-                ]
-            ),
-        )
-        cur = cur.join(F.broadcast(rel_pid), "__rel", "inner").drop(
-            "__rel"
+        cur = route_files(
+            cur, "__rel",
+            [(p.rsplit("/", 1)[-1], pid) for p, pid in src],
+            "delta optimize",
         )
     if zorder_by:
-        cur = _with_zorder_value(cur, zorder_by, data_schema)
+        cur = with_zorder_value(cur, zorder_by, data_schema)
     total = cur.count()
     n_files = max(1, -(-total // target_rows_per_file))
     tmp = os.path.join(table_path, f"_tmp-compact-v{version}")
@@ -1568,18 +1517,6 @@ def compact_delta(
             if rt is not None:
                 keep_ = keep_ + rt
             out_df = _to_phys(out_df, data_cols, pfields, keep=keep_)
-        if zorder_by:
-            out_df = out_df.drop("__zv")
-        out_df.write.mode("overwrite").parquet(tmp)
-        pv = {phys(c): v for c, v in zip(part_cols, ptuples[0])}
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        ):
-            rel = (f"part-{version:05d}-{file_seq:04d}-"
-                    f"{_file_token(table_path)}-compact.parquet")
-            file_seq += 1
-            _put_data(part, os.path.join(table_path, rel))
-            new_files.append((rel, pv))
     else:
         if zorder_by:
             range_cols = [F.col("__pid"), F.col("__zv")]
@@ -1595,24 +1532,17 @@ def compact_delta(
             if rt is not None:
                 keep_ = keep_ + rt
             out_df = _to_phys(out_df, data_cols, pfields, keep=keep_)
-        if zorder_by:
-            out_df = out_df.drop("__zv")
-        (
-            out_df.write.partitionBy("__pid")
-            .mode("overwrite")
-            .parquet(tmp)
+    if zorder_by:
+        out_df = out_df.drop("__zv")
+    for file_seq, (pid, part) in enumerate(
+        write_by_pid(out_df, tmp, single)
+    ):
+        rel = (f"part-{version:05d}-{file_seq:04d}-"
+               f"{_file_token(table_path)}-compact.parquet")
+        _put_data(part, os.path.join(table_path, rel))
+        new_files.append(
+            (rel, {phys(c): v for c, v in zip(part_cols, ptuples[pid])})
         )
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*"))):
-            pid = int(os.path.basename(pdir).split("=", 1)[1])
-            pv = {phys(c): v for c, v in zip(part_cols, ptuples[pid])}
-            for part in sorted(
-                _glob.glob(os.path.join(pdir, "part-*.parquet"))
-            ):
-                rel = (f"part-{version:05d}-{file_seq:04d}-"
-                    f"{_file_token(table_path)}-compact.parquet")
-                file_seq += 1
-                _put_data(part, os.path.join(table_path, rel))
-                new_files.append((rel, pv))
     shutil.rmtree(tmp)
     if not new_files:
         return None
@@ -1631,29 +1561,11 @@ def compact_delta(
         if stat_col is not None
         else {}
     )
-    rt_base = _rt_high_watermark(state) + 1 if rt is not None else None
-    for rel, pv in new_files:
-        full = os.path.join(table_path, rel)
-        st = by_name.get(rel)
-        if stat_col is not None and st is None:
-            os.remove(full)  # empty part: not worth an add action
-            continue
-        add = {
-            "path": rel,
-            "partitionValues": pv,
-            "size": os.path.getsize(full),
-            "modificationTime": 0,
-            "dataChange": False,
-        }
-        if st is not None:
-            add["stats"] = json.dumps(st, default=str)
-        if rt is not None and st is not None:
-            add["baseRowId"] = rt_base
-            add["defaultRowCommitVersion"] = version
-            rt_base += int(st["numRecords"])
-        actions.append({"add": add})
-    if rt is not None:
-        actions.append(_rt_domain_action(rt_base - 1))
+    actions += _add_actions(
+        table_path, new_files, by_name, version,
+        _rt_high_watermark(state) + 1 if rt is not None else None,
+        data_change=False, stats_collected=stat_col is not None,
+    )
     _commit(
         _log_dir(table_path), version, actions,
         operation="OPTIMIZE",
@@ -1664,287 +1576,6 @@ def compact_delta(
         ),
     )
     return version
-
-
-def _validate_merge_clauses(
-    when_matched: list | None,
-    when_not_matched_by_source: list | None,
-    key_col: str,
-    when_not_matched: list | None = None,
-) -> None:
-    """Shape-check conditional-MERGE clause lists: each clause is
-    ``("update", condition_sql_or_None, {col: value_sql})`` or
-    ``("delete", condition_sql_or_None)``, evaluated in declaration
-    order, first match wins (delta-spark's builder semantics).
-    Assignments may not touch the merge key — key rewrites would break
-    the key-pruning contract (and real Delta refuses them on the
-    matched side for the same reason). ``when_not_matched`` takes
-    ``("insert", condition_sql_or_None, {col: value_sql} | None)``
-    clauses only (None values = insertAll); unmatched source rows that
-    match no insert clause are NOT inserted."""
-    for cl in when_not_matched or []:
-        if not cl or cl[0] != "insert":
-            raise ValueError(
-                "delta merge: when_not_matched clause kind must be "
-                f"'insert', got {cl!r}"
-            )
-        if len(cl) not in (2, 3) or (
-            len(cl) == 3
-            and cl[2] is not None
-            and (not isinstance(cl[2], dict) or not cl[2])
-        ):
-            raise ValueError(
-                "delta merge: when_not_matched insert clause needs "
-                "('insert', condition|None[, {col: value_sql}|None])"
-            )
-    for label, clauses in (
-        ("when_matched", when_matched),
-        ("when_not_matched_by_source", when_not_matched_by_source),
-    ):
-        for cl in clauses or []:
-            if not cl or cl[0] not in ("update", "delete"):
-                raise ValueError(
-                    f"delta merge: {label} clause kind must be "
-                    f"'update' or 'delete', got {cl!r}"
-                )
-            if cl[0] == "update":
-                if len(cl) != 3 or not isinstance(cl[2], dict) or not cl[2]:
-                    raise ValueError(
-                        f"delta merge: {label} update clause needs "
-                        "('update', condition|None, {col: value_sql})"
-                    )
-                if key_col in cl[2]:
-                    raise ValueError(
-                        "delta merge: UPDATE SET may not assign the "
-                        f"merge key {key_col!r}"
-                    )
-            elif len(cl) != 2:
-                raise ValueError(
-                    f"delta merge: {label} delete clause needs "
-                    "('delete', condition|None)"
-                )
-
-
-def _apply_insert_clauses(
-    inserts: DataFrame,
-    data_cols: list[str],
-    dtype_of: dict,
-    when_not_matched: list,
-) -> DataFrame:
-    """Conditional insert clauses (delta-spark's
-    whenNotMatchedInsert(cond, values)): the FIRST matching clause
-    supplies the inserted values — ``{col: value_sql}`` assignments
-    over the source row (``s.<col>``), unspecified columns null, a
-    ``None`` value set meaning insertAll. Source rows matching no
-    clause are NOT inserted. ``inserts`` carries ``data_cols`` +
-    ``__pid``."""
-    nmc = list(when_not_matched)
-    s_ins = inserts.alias("s")
-    ichain = None
-    for i, cl in enumerate(nmc, start=1):
-        cond = F.expr(cl[1]) if cl[1] is not None else F.lit(True)
-        ichain = (
-            F.when(cond, F.lit(i))
-            if ichain is None
-            else ichain.when(cond, F.lit(i))
-        )
-    iidx = ichain.otherwise(F.lit(0)) if ichain is not None else F.lit(0)
-    ivals: list[Column] = []
-    for c in data_cols:
-        v = None
-        for i, cl in enumerate(nmc, start=1):
-            vset = cl[2] if len(cl) == 3 else None
-            if vset is None:
-                term_val: Column = F.col(f"s.{c}")
-            elif c in vset:
-                term_val = F.expr(vset[c]).cast(dtype_of[c])
-            else:
-                term_val = F.lit(None).cast(dtype_of[c])
-            term = (iidx == i, term_val)
-            v = F.when(*term) if v is None else v.when(*term)
-        ivals.append(
-            (v if v is not None
-             else F.lit(None).cast(dtype_of[c])).alias(c)
-        )
-    return s_ins.filter(iidx != 0).select(*ivals, F.col("s.__pid"))
-
-
-def _apply_merge_clauses(
-    cur: DataFrame,
-    latest_p: DataFrame,
-    key_col: str,
-    data_cols: list[str],
-    when_matched: list | None,
-    when_not_matched_by_source: list | None,
-    want_changes: bool = False,
-    when_not_matched: list | None = None,
-    carry_cols: tuple | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """Conditional-MERGE row algebra (delta-spark's
-    whenMatchedUpdate / whenMatchedDelete /
-    whenNotMatchedBySourceUpdate / whenNotMatchedBySourceDelete):
-
-    ONE left-outer join target←source decides matched-ness; a CASE
-    chain computes the FIRST clause (declaration order) whose
-    condition holds for each row; delete-clause rows drop, update
-    clauses apply their ``{col: value_sql}`` assignments (conditions
-    and values see ``t.<col>`` = target row and ``s.<col>`` = source
-    row; on the not-matched-by-source side every ``s.`` read is
-    null), unmatched-clause rows pass through unchanged, and source
-    rows matching NO target row insert (whenNotMatchedInsertAll —
-    the engine's standing upsert insert side). Still one shuffle
-    join + one write: the clause algebra is pure Column CASE work on
-    top of the existing single-job merge plan.
-
-    ``want_changes=True`` additionally returns the Change Data Feed
-    row set (``_change_type`` ∈ update_preimage / update_postimage /
-    delete / insert; pass-through rows emit nothing) — the joined
-    frame is checkpointed once so the derived frames share one
-    evaluation instead of re-running the join per change type.
-
-    ``carry_cols=(id_col, version_col)`` threads ROW TRACKING / ROW
-    LINEAGE through the algebra: both live on ``cur``; kept target
-    rows carry the id verbatim (updates too — the lineage contract),
-    the version column nulls on update-clause rows (deriving to the
-    new add's commit version / data sequence) and carries otherwise,
-    and insert rows get null ids (fresh from the new files'
-    reservations). CDF rows stay lineage-free."""
-    wm = list(when_matched or [])
-    nm = list(when_not_matched_by_source or [])
-    t = cur.alias("t")
-    s = latest_p.withColumn("__s_m", F.lit(1)).alias("s")
-    on = F.col(f"t.{key_col}").eqNullSafe(F.col(f"s.{key_col}")) & (
-        F.col("t.__pid") == F.col("s.__pid")
-    )
-    j = t.join(s, on, "left")
-    matched = F.col("s.__s_m").isNotNull()
-
-    def _first_match_idx(clauses: list, side: Column) -> Column:
-        chain = None
-        for i, cl in enumerate(clauses, start=1):
-            cond = side & (
-                F.expr(cl[1]) if cl[1] is not None else F.lit(True)
-            )
-            chain = (
-                F.when(cond, F.lit(i))
-                if chain is None
-                else chain.when(cond, F.lit(i))
-            )
-        return chain.otherwise(F.lit(0)) if chain is not None else F.lit(0)
-
-    midx = _first_match_idx(wm, matched)
-    nidx = _first_match_idx(nm, ~matched)
-
-    vals: list[Column] = []
-    for c in data_cols:
-        v = None
-        for idx_col, clauses in ((midx, wm), (nidx, nm)):
-            for i, cl in enumerate(clauses, start=1):
-                if cl[0] == "update" and c in cl[2]:
-                    term_cond = idx_col == i
-                    term_val = F.expr(cl[2][c]).cast(
-                        cur.schema[c].dataType
-                    )
-                    v = (
-                        F.when(term_cond, term_val)
-                        if v is None
-                        else v.when(term_cond, term_val)
-                    )
-        col = (
-            v.otherwise(F.col(f"t.{c}")) if v is not None
-            else F.col(f"t.{c}")
-        )
-        vals.append(col.alias(c))
-
-    drop_m = [i for i, cl in enumerate(wm, start=1) if cl[0] == "delete"]
-    drop_n = [i for i, cl in enumerate(nm, start=1) if cl[0] == "delete"]
-    upd_m = [i for i, cl in enumerate(wm, start=1) if cl[0] == "update"]
-    upd_n = [i for i, cl in enumerate(nm, start=1) if cl[0] == "update"]
-    keep = F.lit(True)
-    if drop_m:
-        keep = keep & ~midx.isin(drop_m)
-    if drop_n:
-        keep = keep & ~nidx.isin(drop_n)
-    upd = F.lit(False)
-    if upd_m:
-        upd = upd | midx.isin(upd_m)
-    if upd_n:
-        upd = upd | nidx.isin(upd_n)
-
-    carry_sel: list[Column] = []
-    if carry_cols is not None:
-        id_c, cv_c = carry_cols
-        carry_sel = [
-            F.col(f"t.{id_c}").alias(id_c),
-            F.when(upd, F.lit(None).cast("long"))
-            .otherwise(F.col(f"t.{cv_c}"))
-            .alias(cv_c),
-        ]
-    base = j.select(
-        *vals,  # post-clause values under the data_col names
-        F.col("t.__pid").alias("__pid"),
-        *carry_sel,
-        *[F.col(f"t.{c}").alias(f"__old_{c}") for c in data_cols],
-        keep.alias("__keep"),
-        upd.alias("__upd"),
-    )
-    if want_changes:
-        # four consumers below — evaluate the join once
-        base = base.localCheckpoint(eager=False)
-    target_rows = base.filter(F.col("__keep")).select(
-        *data_cols, "__pid",
-        *([carry_cols[0], carry_cols[1]] if carry_cols else []),
-    )
-
-    inserts = (
-        latest_p.alias("b")
-        .join(
-            cur.select(
-                F.col(key_col).alias("__tk"),
-                F.col("__pid").alias("__tpid"),
-            ),
-            F.col(f"b.{key_col}").eqNullSafe(F.col("__tk"))
-            & (F.col("b.__pid") == F.col("__tpid")),
-            "left_anti",
-        )
-    )
-    if when_not_matched is not None:
-        inserts = _apply_insert_clauses(
-            inserts, data_cols,
-            {c: cur.schema[c].dataType for c in data_cols},
-            when_not_matched,
-        )
-    if carry_cols is not None:
-        inserts = inserts.withColumn(
-            carry_cols[0], F.lit(None).cast("long")
-        ).withColumn(carry_cols[1], F.lit(None).cast("long"))
-    out = target_rows.unionByName(inserts)
-    if not want_changes:
-        return out, None
-    old_sel = [F.col(f"__old_{c}").alias(c) for c in data_cols]
-    pre = (
-        base.filter(F.col("__upd"))
-        .select(*old_sel, "__pid")
-        .withColumn("_change_type", F.lit("update_preimage"))
-    )
-    post = (
-        base.filter(F.col("__upd"))
-        .select(*data_cols, "__pid")
-        .withColumn("_change_type", F.lit("update_postimage"))
-    )
-    dele = (
-        base.filter(~F.col("__keep"))
-        .select(*old_sel, "__pid")
-        .withColumn("_change_type", F.lit("delete"))
-    )
-    ins_c = inserts
-    if carry_cols is not None:  # CDF rows are logical
-        ins_c = ins_c.drop(*carry_cols)
-    ins_c = ins_c.withColumn("_change_type", F.lit("insert"))
-    changes = (
-        pre.unionByName(post).unionByName(dele).unionByName(ins_c)
-    )
-    return out, changes
 
 
 def merge_delta_batch(
@@ -2015,14 +1646,12 @@ def merge_delta_batch(
     delete-clause rows emit delete, inserts emit insert, pass-through
     rows emit nothing. The commitInfo records the clause predicates
     in operationParameters."""
-    from pyspark.sql.window import Window
-
     conditional = bool(
         when_matched or when_not_matched_by_source
         or when_not_matched is not None
     )
     if conditional:
-        _validate_merge_clauses(
+        validate_merge_clauses(
             when_matched, when_not_matched_by_source, key_col,
             when_not_matched=when_not_matched,
         )
@@ -2140,23 +1769,8 @@ def merge_delta_batch(
             "delta merge: the merge key cannot be a partition column "
             "(every key group would be a one-row partition)"
         )
-    w = Window.partitionBy(key_col, *part_cols).orderBy(
-        F.col(ts_col).desc()
-    )
-    latest = (
-        batch.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint(eager=False)
-    )
-    # the grouped key-stats aggregate doubles as the checkpoint's
-    # materializer AND yields n_total (sum of per-partition n) — the
-    # old shape ran a separate full count job first. Exact key LISTS
-    # (the sharper per-partition file pruner) are recovered by one
-    # extra collect only when the batch fits the driver cap, where
-    # that collect is cheap; an over-cap backfill commit saves a
-    # whole pass. (Iceberg twin: merge_iceberg_batch.)
-    # CHECK-constraint violation counts ride the SAME aggregate (rows
+    latest = dedupe_latest(batch, key_col, ts_col, part_cols)
+    # CHECK-constraint violation counts ride the key-stats aggregate (rows
     # the merge ADDS must satisfy them; rows re-written from affected
     # files already did) — the old standalone check paid a second full
     # batch pass whenever the table declared constraints.
@@ -2170,20 +1784,9 @@ def merge_delta_batch(
         if state["meta"] is not None
         else ([], [])
     )
-    gstats = (
-        latest.groupBy(*part_cols)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(key_col).alias("kmin"),
-            F.max(key_col).alias("kmax"),
-            F.max(F.col(key_col).isNull().cast("int")).alias(
-                "null_key"
-            ),
-            *ck_aggs,
-        )
-        .collect()
+    n_total, pstats, gstats = batch_key_stats(
+        latest, key_col, part_cols, extra_aggs=ck_aggs
     )
-    n_total = sum(int(r["n"]) for r in gstats)
     if n_total > 0 and ck_names:
         raise_constraint_violations(
             state["meta"],
@@ -2230,50 +1833,7 @@ def merge_delta_batch(
     # partitions; file pruning is pure driver metadata work; then ONE
     # anti-join + ONE partitionBy write (on a surrogate __pid column,
     # so partition VALUES never round-trip through directory-name
-    # string encoding) covers every partition. The old shape ran one
-    # write job (+ collects) per partition — fine for a late-data
-    # trickle, a driver bottleneck for a backfill touching thousands
-    # of partitions.
-    if n_total <= _MAX_DRIVER_KEYS:
-        # ``latest`` is one row per (key, partition) by construction,
-        # so this collect IS the distinct key set, split per partition
-        krows = latest.select(*part_cols, key_col).collect()
-        grouped: dict[tuple, list] = {}
-        for r in krows:
-            grouped.setdefault(
-                tuple(r[c] for c in part_cols), []
-            ).append(r[key_col])
-        pstats: dict[tuple, dict] = {}
-        for pt, vals in grouped.items():
-            nn = sorted(v for v in vals if v is not None)
-            pstats[pt] = {
-                "n": len(vals),
-                "keys": nn,
-                "kmin": nn[0] if nn else None,
-                "kmax": nn[-1] if nn else None,
-                "has_null": len(nn) < len(vals),
-            }
-    else:  # too many keys for the driver: reuse the grouped aggregate
-        pstats = {
-            tuple(r[c] for c in part_cols): {
-                "n": r["n"],
-                "keys": None,
-                "kmin": r["kmin"],
-                "kmax": r["kmax"],
-                "has_null": bool(r["null_key"]),
-            }
-            for r in gstats
-            if r["n"]
-        }
-
-    if when_not_matched_by_source and not pstats and not part_cols:
-        # empty source, unpartitioned: the clause pass still needs
-        # the one () partition to route through (a partitioned empty
-        # source routes through minted live-partition pids below)
-        pstats = {
-            (): {"n": 0, "keys": [], "kmin": None, "kmax": None,
-                 "has_null": False}
-        }
+    # string encoding) covers every partition.
     ptuples = sorted(pstats, key=str)
     pid_of = {pt: i for i, pt in enumerate(ptuples)}
     # partitionValues (and stats) in add actions are keyed by PHYSICAL
@@ -2303,7 +1863,7 @@ def merge_delta_batch(
             _entry_from_add(p, a, phys(key_col))
             for p, a in live_by_pv.get(pv_key, [])
         ]
-        hit, _miss = _affected(
+        hit, _miss = affected(
             entries, st["keys"], st["kmin"], st["kmax"], st["has_null"]
         )
         if hit:
@@ -2349,16 +1909,14 @@ def merge_delta_batch(
     # instead of the dynamic-partition write with its per-task sort
     # (~1s on the benched sf0.1 merge).
     single = len(ptuples) + len(minted) == 1
-    if part_cols:
-        pid_schema = T.StructType(
-            [latest.schema[c] for c in part_cols]
-            + [T.StructField("__pid", T.IntegerType(), False)]
+    pid_df = (
+        pid_lookup(
+            spark, ptuples,
+            T.StructType([latest.schema[c] for c in part_cols]),
         )
-        pid_df = local_rows_df(spark, 
-            [pt + (pid_of[pt],) for pt in ptuples], pid_schema
-        )
-    else:
-        pid_df = None
+        if part_cols
+        else None
+    )
     # constraint re-attachment needs partition values for EVERY pid;
     # minted pids type their values by casting the log's
     # partitionValues strings — the reader's own typing rule. Batch
@@ -2380,22 +1938,9 @@ def merge_delta_batch(
             "__pid",
         )
         pid_df_all = pid_df.unionByName(mint_df)
-    if single or not part_cols:
-        latest_p = latest.select(*data_cols).withColumn(
-            "__pid", F.lit(0).cast("int")
-        )
-    else:
-        pcond = None
-        for c in part_cols:
-            e = F.col(f"b.{c}").eqNullSafe(F.col(f"pd.{c}"))
-            pcond = e if pcond is None else (pcond & e)
-        latest_p = (
-            latest.alias("b")
-            .join(F.broadcast(pid_df.alias("pd")), pcond, "inner")
-            .select(
-                *[F.col(f"b.{c}") for c in data_cols], F.col("pd.__pid")
-            )
-        )
+    latest_p = route(
+        latest, data_cols, part_cols, None if single else pid_df
+    )
 
     merged = latest_p
     total_hit_rows = 0
@@ -2410,23 +1955,6 @@ def merge_delta_batch(
             for pid, hits in sorted(hit_by_pid.items())
             for e in hits
         ]
-        bn_pid_rows = [
-            (p.rsplit("/", 1)[-1], pid) for p, pid in rel_pid_rows
-        ]
-        if len({b for b, _ in bn_pid_rows}) != len(bn_pid_rows):
-            raise NotImplementedError(
-                "delta merge: affected files share a basename — the "
-                "pid routing join would misattribute rows"
-            )
-        rel_pid = local_rows_df(spark, 
-            bn_pid_rows,
-            T.StructType(
-                [
-                    T.StructField("__rel", T.StringType(), False),
-                    T.StructField("__pid", T.IntegerType(), False),
-                ]
-            ),
-        )
         # explicit schema: pre-evolution files read new columns
         # as null (Delta mergeSchema read semantics); files carrying
         # deletion vectors read through the DV anti-join so the merge
@@ -2441,43 +1969,13 @@ def merge_delta_batch(
         if single:
             cur = cur.withColumn("__pid", F.lit(0).cast("int"))
         else:
-            cur = cur.join(
-                F.broadcast(rel_pid), "__rel", "inner"
-            ).drop("__rel")
-        bk = latest_p.select(
-            F.col(key_col).alias("__bk"), F.col("__pid").alias("__bpid")
-        )
-        touch = F.col(f"cur.{key_col}").eqNullSafe(F.col("__bk")) & (
-            F.col("cur.__pid") == F.col("__bpid")
-        )
-        if rt is not None and not conditional:
-            # row tracking's UPDATE contract: a batch row replacing a
-            # matched target row KEEPS that row's id (and takes this
-            # commit's version — a null materialized cv derives from
-            # the new add's defaultRowCommitVersion); unmatched batch
-            # rows insert with null id (fresh from baseRowId + pos).
-            # (The CONDITIONAL path carries lineage inside the clause
-            # algebra itself — carry_cols below.)
-            cur_ids = cur.select(
-                F.col(key_col).alias("__ck"),
-                F.col("__pid").alias("__cpid"),
-                F.col("__rt_id").alias("__rt_prev"),
-            )
-            m2 = F.col(f"b.{key_col}").eqNullSafe(F.col("__ck")) & (
-                F.col("b.__pid") == F.col("__cpid")
-            )
-            latest_p = (
-                latest_p.alias("b")
-                .join(cur_ids, m2, "left")
-                .select(
-                    *[F.col(f"b.{c}") for c in data_cols],
-                    F.col("b.__pid"),
-                    F.col("__rt_prev").alias("__rt_id"),
-                    F.lit(None).cast("long").alias("__rt_cv"),
-                )
+            cur = route_files(
+                cur, "__rel",
+                [(p.rsplit("/", 1)[-1], pid) for p, pid in rel_pid_rows],
+                "delta merge",
             )
         if conditional:
-            merged, cond_changes = _apply_merge_clauses(
+            merged, cond_changes = apply_merge_clauses(
                 cur, latest_p, key_col, data_cols,
                 when_matched, when_not_matched_by_source,
                 want_changes=change_data,
@@ -2502,10 +2000,12 @@ def merge_delta_batch(
                 )
             _ck(state["meta"], merged_ck.drop("__pid"), "merge")
         else:
-            merged = (
-                cur.alias("cur")
-                .join(bk, touch, "left_anti")
-                .unionByName(latest_p)
+            # under row tracking a matched batch row keeps the target
+            # row's id (the conditional path carries lineage inside the
+            # clause algebra itself)
+            merged = upsert(
+                cur, latest_p, key_col,
+                carry_cols=("__rt_id", "__rt_cv") if rt is not None else None,
             )
         total_hit_rows = sum(
             max(e["rows"], 0)
@@ -2521,6 +2021,13 @@ def merge_delta_batch(
             pre_src = cur
             if rt is not None:
                 pre_src = cur.drop("__rt_id", "__rt_cv")
+            bk = latest_p.select(
+                F.col(key_col).alias("__bk"),
+                F.col("__pid").alias("__bpid"),
+            )
+            touch = F.col(f"cur.{key_col}").eqNullSafe(F.col("__bk")) & (
+                F.col("cur.__pid") == F.col("__bpid")
+            )
             pre = (
                 pre_src.alias("cur")
                 .join(bk, touch, "inner")
@@ -2531,7 +2038,7 @@ def merge_delta_batch(
     if conditional and when_not_matched is not None and not hit_paths:
         # no affected files: every batch row is unmatched — the
         # insert clauses still decide which rows (and values) land
-        merged = _apply_insert_clauses(
+        merged = apply_insert_clauses(
             latest_p, data_cols,
             {f.name: f.dataType for f in data_schema.fields},
             when_not_matched,
@@ -2541,8 +2048,7 @@ def merge_delta_batch(
                 "_change_type", F.lit("insert")
             )
 
-    new_adds: list[dict] = []  # (rel, partitionValues) pending stats
-    file_seq = 0
+    new_adds: list[tuple[str, dict]] = []  # (rel, partitionValues)
     n_rows = n_total + total_hit_rows
     n_files = max(1, -(-n_rows // target_rows_per_file))
     tmp = os.path.join(table_path, f"_tmp-merge-v{version}")
@@ -2557,53 +2063,24 @@ def merge_delta_batch(
         merged = merged.withColumnRenamed(
             "__rt_id", rt[0]
         ).withColumnRenamed("__rt_cv", rt[1])
-    if single:
-        out_df = merged.drop("__pid").repartitionByRange(
-            n_files, F.col(key_col)
+    pid_cols = () if single else ("__pid",)
+    out_df = (merged.drop("__pid") if single else merged).repartitionByRange(
+        n_files, *[F.col(c) for c in pid_cols], F.col(key_col)
+    )
+    if mapped:
+        out_df = _to_phys(
+            out_df, data_cols, pfields, keep=pid_cols + (rt or ())
         )
-        if mapped:
-            out_df = _to_phys(
-                out_df, data_cols, pfields,
-                keep=rt if rt is not None else (),
-            )
-        out_df.write.mode("overwrite").parquet(tmp)
-        pv = pv_of_pid[0]
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        ):
-            rel = (f"part-{version:05d}-{file_seq:04d}-"
-                    f"{_file_token(table_path)}-merge.parquet")
-            file_seq += 1
-            _put_data(part, os.path.join(table_path, rel))
-            new_adds.append({"path": rel, "partitionValues": pv})
-    else:
-        out_df = merged.repartitionByRange(
-            n_files, F.col("__pid"), F.col(key_col)
-        )
-        if mapped:
-            out_df = _to_phys(
-                out_df, data_cols, pfields,
-                keep=("__pid", *rt) if rt is not None else ("__pid",),
-            )
-        (
-            out_df.write.partitionBy("__pid")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*"))):
-            pid = int(os.path.basename(pdir).split("=", 1)[1])
-            pv = pv_of_pid[pid]
-            for part in sorted(
-                _glob.glob(os.path.join(pdir, "part-*.parquet"))
-            ):
-                rel = (f"part-{version:05d}-{file_seq:04d}-"
-                    f"{_file_token(table_path)}-merge.parquet")
-                file_seq += 1
-                _put_data(part, os.path.join(table_path, rel))
-                new_adds.append({"path": rel, "partitionValues": pv})
+    for file_seq, (pid, part) in enumerate(
+        write_by_pid(out_df, tmp, single)
+    ):
+        rel = (f"part-{version:05d}-{file_seq:04d}-"
+               f"{_file_token(table_path)}-merge.parquet")
+        _put_data(part, os.path.join(table_path, rel))
+        new_adds.append((rel, pv_of_pid[pid]))
     shutil.rmtree(tmp)
 
-    cdc_rel: list[str] = []
+    cdc_actions: list[dict] = []
     if change_data:
         if cond_changes is not None:
             # conditional clauses: the CDF row set came out of the
@@ -2648,27 +2125,12 @@ def merge_delta_batch(
         # re-attach the typed partition columns from the pid lookup
         if pid_df_all is not None:
             changes = changes.join(F.broadcast(pid_df_all), "__pid")
-        changes_all = changes.select(*latest.columns, "_change_type")
-        if mapped:  # cdc parquet carries physical names, like data
-            changes_all = _to_phys(
-                changes_all, list(latest.columns), pfields,
-                keep=("_change_type",),
-            )
-        cdc_tmp = os.path.join(table_path, f"_tmp-cdc-v{version}")
-        changes_all.write.mode("overwrite").parquet(cdc_tmp)
-        os.makedirs(
-            os.path.join(table_path, "_change_data"), exist_ok=True
+        cdc_actions = _write_cdc(
+            table_path, version, changes, list(latest.columns), pfields
         )
-        for i, part in enumerate(
-            sorted(_glob.glob(os.path.join(cdc_tmp, "part-*.parquet")))
-        ):
-            rel = f"_change_data/cdc-{version:05d}-{i:04d}.parquet"
-            _put_data(part, os.path.join(table_path, rel))
-            cdc_rel.append(rel)
-        shutil.rmtree(cdc_tmp)
 
     # stats-scan ONLY the new files' key column (footer-cheap read)
-    new_rel = [a["path"] for a in new_adds]
+    new_rel = [r for r, _ in new_adds]
     by_name = {}
     if new_rel:
         by_name = _collect_file_stats(
@@ -2706,31 +2168,11 @@ def merge_delta_batch(
         actions.append({"metaData": dict(state["meta"])})
     if batch_id is not None:
         actions.append({"txn": {"appId": app_id, "version": batch_id}})
-    rt_base = _rt_high_watermark(state) + 1 if rt is not None else None
-    for pending in new_adds:
-        rel = pending["path"]
-        r = by_name.get(rel)
-        if r is None:  # empty part file: not worth an add action
-            os.remove(os.path.join(table_path, rel))
-            continue
-        add = {
-            "path": rel,
-            "partitionValues": pending["partitionValues"],
-            "size": os.path.getsize(os.path.join(table_path, rel)),
-            "modificationTime": 0,
-            "dataChange": True,
-            "stats": json.dumps(r, default=str),
-        }
-        if rt is not None:
-            # fresh-id reservation: each add covers record_count ids
-            # from the watermark (rows with materialized ids leave
-            # theirs unused — the spec only needs uniqueness)
-            add["baseRowId"] = rt_base
-            add["defaultRowCommitVersion"] = version
-            rt_base += int(r["numRecords"])
-        actions.append({"add": add})
-    if rt is not None:
-        actions.append(_rt_domain_action(rt_base - 1))
+    actions += _add_actions(
+        table_path, new_adds, by_name, version,
+        _rt_high_watermark(state) + 1 if rt is not None else None,
+        data_change=True,
+    )
     for path in hit_paths:
         actions.append(
             {
@@ -2739,21 +2181,7 @@ def merge_delta_batch(
                 )
             }
         )
-    for rel in cdc_rel:
-        full = os.path.join(table_path, rel)
-        if os.path.getsize(full) == 0:
-            os.remove(full)
-            continue
-        actions.append(
-            {
-                "cdc": {
-                    "path": rel,
-                    "partitionValues": {},
-                    "size": os.path.getsize(full),
-                    "dataChange": False,
-                }
-            }
-        )
+    actions += cdc_actions
     op_params: dict = {"key": key_col}
     if when_matched:
         # commitInfo records the clause predicates (delta-spark puts
@@ -3030,23 +2458,11 @@ def _dml_where(
                 keep=rt if rt is not None else (),
             )
     else:
-        pid_lk = local_rows_df(spark, 
+        body = route_files(
+            out.drop(*part_cols), "__bn",
             [(bn, pid_of[pv_of[bn]]) for bn in touched_bn],
-            T.StructType(
-                [
-                    T.StructField("__bn", T.StringType(), False),
-                    T.StructField("__pid", T.IntegerType(), False),
-                ]
-            ),
-        )
-        body = (
-            out.drop(*part_cols)
-            .join(F.broadcast(pid_lk), "__bn")
-            .drop("__bn")
-            .repartitionByRange(
-                n_files, F.col("__pid"), F.col(data_cols[0])
-            )
-        )
+            "delta dml",
+        ).repartitionByRange(n_files, F.col("__pid"), F.col(data_cols[0]))
         if mapped:
             body = _to_phys(
                 body, data_cols, pfields,
@@ -3057,40 +2473,18 @@ def _dml_where(
     op = "UPDATE" if set_exprs else "DELETE"
     tag = op.lower()
     new_files: list[tuple[str, dict]] = []
-    file_seq = 0
-    if single:
-        body.write.mode("overwrite").parquet(tmp)
-        pv = {
-            phys(c): v for c, v in zip(part_cols, ptuples[0])
-        }
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        ):
-            rel = (f"part-{version:05d}-{file_seq:04d}-"
-                f"{_file_token(table_path)}-{tag}.parquet")
-            file_seq += 1
-            _put_data(part, os.path.join(table_path, rel))
-            new_files.append((rel, pv))
-    else:
-        body.write.partitionBy("__pid").mode("overwrite").parquet(tmp)
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*"))):
-            pid = int(os.path.basename(pdir).split("=", 1)[1])
-            pv = {
-                phys(c): v
-                for c, v in zip(part_cols, ptuples[pid])
-            }
-            for part in sorted(
-                _glob.glob(os.path.join(pdir, "part-*.parquet"))
-            ):
-                rel = (
-                    f"part-{version:05d}-{file_seq:04d}-{tag}.parquet"
-                )
-                file_seq += 1
-                _put_data(part, os.path.join(table_path, rel))
-                new_files.append((rel, pv))
+    for file_seq, (pid, part) in enumerate(
+        write_by_pid(body, tmp, single)
+    ):
+        rel = (f"part-{version:05d}-{file_seq:04d}-"
+               f"{_file_token(table_path)}-{tag}.parquet")
+        _put_data(part, os.path.join(table_path, rel))
+        new_files.append(
+            (rel, {phys(c): v for c, v in zip(part_cols, ptuples[pid])})
+        )
     shutil.rmtree(tmp)
 
-    cdc_rel: list[str] = []
+    cdc_actions: list[dict] = []
     if change_data and pre is not None:
         if set_exprs is None:
             changes = pre.drop("__bn").withColumn(
@@ -3114,26 +2508,9 @@ def _dml_where(
                 *[F.col(c) for c in part_cols],
             ).withColumn("_change_type", F.lit("update_postimage"))
             changes = pre_rows.unionByName(post_rows)
-        changes_all = changes.select(
-            *[f.name for f in schema.fields], "_change_type"
+        cdc_actions = _write_cdc(
+            table_path, version, changes, schema.fieldNames(), pfields
         )
-        if mapped:
-            changes_all = _to_phys(
-                changes_all, [f.name for f in schema.fields], pfields,
-                keep=("_change_type",),
-            )
-        cdc_tmp = os.path.join(table_path, f"_tmp-cdc-v{version}")
-        changes_all.write.mode("overwrite").parquet(cdc_tmp)
-        os.makedirs(
-            os.path.join(table_path, "_change_data"), exist_ok=True
-        )
-        for i, part in enumerate(
-            sorted(_glob.glob(os.path.join(cdc_tmp, "part-*.parquet")))
-        ):
-            rel = f"_change_data/cdc-{version:05d}-{i:04d}.parquet"
-            _put_data(part, os.path.join(table_path, rel))
-            cdc_rel.append(rel)
-        shutil.rmtree(cdc_tmp)
 
     by_name = _collect_file_stats(
         spark, table_path, [r for r, _ in new_files],
@@ -3141,47 +2518,16 @@ def _dml_where(
         _phys_schema(data_schema, pfields) if mapped else data_schema,
     ) if new_files else {}
     actions: list[dict] = []
-    rt_base = _rt_high_watermark(state) + 1 if rt is not None else None
-    for rel, pv in new_files:
-        full = os.path.join(table_path, rel)
-        st = by_name.get(rel)
-        if st is None:  # every row of this part matched a DELETE
-            os.remove(full)
-            continue
-        add = {
-            "path": rel,
-            "partitionValues": pv,
-            "size": os.path.getsize(full),
-            "modificationTime": 0,
-            "dataChange": True,
-            "stats": json.dumps(st, default=str),
-        }
-        if rt is not None:
-            add["baseRowId"] = rt_base
-            add["defaultRowCommitVersion"] = version
-            rt_base += int(st["numRecords"])
-        actions.append({"add": add})
-    if rt is not None:
-        actions.append(_rt_domain_action(rt_base - 1))
+    actions += _add_actions(
+        table_path, new_files, by_name, version,
+        _rt_high_watermark(state) + 1 if rt is not None else None,
+        data_change=True,
+    )
     for p in touched:
         actions.append(
             {"remove": _remove_action(p, live[p], data_change=True)}
         )
-    for rel in cdc_rel:
-        full = os.path.join(table_path, rel)
-        if os.path.getsize(full) == 0:
-            os.remove(full)
-            continue
-        actions.append(
-            {
-                "cdc": {
-                    "path": rel,
-                    "partitionValues": {},
-                    "size": os.path.getsize(full),
-                    "dataChange": False,
-                }
-            }
-        )
+    actions += cdc_actions
     _commit(
         _log_dir(table_path), version, actions,
         operation=op,
@@ -3707,19 +3053,8 @@ def purge_deletion_vectors(
     if single:
         kept = kept.drop("__dv_pos", "__dv_bn")
     else:
-        pid_lk = local_rows_df(spark, 
-            bn_pid,
-            T.StructType(
-                [
-                    T.StructField("__dv_bn", T.StringType(), False),
-                    T.StructField("__pid", T.IntegerType(), False),
-                ]
-            ),
-        )
-        kept = (
-            kept.drop("__dv_pos")
-            .join(F.broadcast(pid_lk), "__dv_bn", "inner")
-            .drop("__dv_bn")
+        kept = route_files(
+            kept.drop("__dv_pos"), "__dv_bn", bn_pid, "delta purge"
         )
 
     total_rows = sum(
@@ -3730,62 +3065,29 @@ def purge_deletion_vectors(
     n_files = max(1, -(-total_rows // target_rows_per_file))
     tmp = os.path.join(table_path, f"_tmp-purge-v{version}")
     new_files: list[tuple[str, dict]] = []
-    file_seq = 0
     data_cols = [f.name for f in data_schema.fields]
-    if single:
-        out_df = (
-            kept.repartitionByRange(n_files, F.col(stat_col))
-            if stat_col is not None
-            else kept.coalesce(n_files)
+    pid_cols = () if single else ("__pid",)
+    range_cols = [F.col(c) for c in pid_cols] + (
+        [F.col(stat_col)] if stat_col is not None else []
+    )
+    out_df = (
+        kept.repartitionByRange(n_files, *range_cols)
+        if range_cols
+        else kept.coalesce(n_files)
+    )
+    if mapped:
+        out_df = _to_phys(
+            out_df, data_cols, pfields, keep=pid_cols + (rt or ())
         )
-        if mapped:
-            out_df = _to_phys(
-                out_df, data_cols, pfields,
-                keep=rt if rt is not None else (),
-            )
-        out_df.write.mode("overwrite").parquet(tmp)
-        pv = next(
-            iter(dv_adds.values())
-        ).get("partitionValues") or {}
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        ):
-            rel = (f"part-{version:05d}-{file_seq:04d}-"
-                    f"{_file_token(table_path)}-purge.parquet")
-            file_seq += 1
-            _put_data(part, os.path.join(table_path, rel))
-            new_files.append((rel, pv))
-    else:
-        pv_of_pid = {
-            pid_of[pt]: {
-                phys(c): v for c, v in zip(part_cols, pt)
-            }
-            for pt in ptuples
-        }
-        range_cols = [F.col("__pid")] + (
-            [F.col(stat_col)] if stat_col is not None else []
+    for file_seq, (pid, part) in enumerate(
+        write_by_pid(out_df, tmp, single)
+    ):
+        rel = (f"part-{version:05d}-{file_seq:04d}-"
+               f"{_file_token(table_path)}-purge.parquet")
+        _put_data(part, os.path.join(table_path, rel))
+        new_files.append(
+            (rel, {phys(c): v for c, v in zip(part_cols, ptuples[pid])})
         )
-        out_df = kept.repartitionByRange(n_files, *range_cols)
-        if mapped:
-            out_df = _to_phys(
-                out_df, data_cols, pfields,
-                keep=("__pid", *rt) if rt is not None else ("__pid",),
-            )
-        (
-            out_df.write.partitionBy("__pid")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*"))):
-            pid = int(os.path.basename(pdir).split("=", 1)[1])
-            for part in sorted(
-                _glob.glob(os.path.join(pdir, "part-*.parquet"))
-            ):
-                rel = (f"part-{version:05d}-{file_seq:04d}-"
-                    f"{_file_token(table_path)}-purge.parquet")
-                file_seq += 1
-                _put_data(part, os.path.join(table_path, rel))
-                new_files.append((rel, pv_of_pid[pid]))
     shutil.rmtree(tmp)
 
     actions: list[dict] = []
@@ -3798,29 +3100,11 @@ def purge_deletion_vectors(
         if (stat_col is not None and new_files)
         else {}
     )
-    rt_base = _rt_high_watermark(state) + 1 if rt is not None else None
-    for rel, pv in new_files:
-        full = os.path.join(table_path, rel)
-        st = by_name.get(rel)
-        if stat_col is not None and st is None:
-            os.remove(full)  # fully-deleted content: no replacement
-            continue
-        add = {
-            "path": rel,
-            "partitionValues": pv,
-            "size": os.path.getsize(full),
-            "modificationTime": 0,
-            "dataChange": False,
-        }
-        if st is not None:
-            add["stats"] = json.dumps(st, default=str)
-            if rt is not None:
-                add["baseRowId"] = rt_base
-                add["defaultRowCommitVersion"] = version
-                rt_base += int(st["numRecords"])
-        actions.append({"add": add})
-    if rt is not None:
-        actions.append(_rt_domain_action(rt_base - 1))
+    actions += _add_actions(
+        table_path, new_files, by_name, version,
+        _rt_high_watermark(state) + 1 if rt is not None else None,
+        data_change=False, stats_collected=stat_col is not None,
+    )
     for p in sorted(dv_adds):
         actions.append(
             {"remove": _remove_action(p, dv_adds[p], data_change=False)}
@@ -3927,7 +3211,7 @@ def _delete_via_dv(
     if n_keys is None:
         n_keys = kdf.count()
     matched = cur.join(
-        F.broadcast(nk) if n_keys <= _MAX_DRIVER_KEYS else nk,
+        F.broadcast(nk) if n_keys <= MAX_DRIVER_KEYS else nk,
         F.col(key_col).eqNullSafe(F.col("__nk")),
         "inner",
     ).drop("__nk")
@@ -3966,8 +3250,8 @@ def _delete_via_dv(
         # Arrow toPandas, not collect(): the pickled-row path
         # materializes a Row object per position (measured ~0.5 s of
         # pure driver CPU at ~70k positions).
-        pos_pdf = positions.limit(_MAX_DRIVER_KEYS + 1).toPandas()
-        if len(pos_pdf) <= _MAX_DRIVER_KEYS:
+        pos_pdf = positions.limit(MAX_DRIVER_KEYS + 1).toPandas()
+        if len(pos_pdf) <= MAX_DRIVER_KEYS:
             per_file = []
             for bn, grp in pos_pdf.groupby("__bn", sort=False):
                 ps = sorted(set(int(p) for p in grp["__pos"]))
@@ -4050,7 +3334,7 @@ def _delete_via_dv(
             }
             actions.append({"add": add})
 
-        cdc_rel: list[str] = []
+        cdc_actions: list[dict] = []
         if change_data:
             deleted = matched.drop("__pos")
             if part_cols:
@@ -4077,40 +3361,12 @@ def _delete_via_dv(
                     ],
                 )
                 deleted = deleted.join(F.broadcast(pvdf), "__bn")
-            changes_all = deleted.withColumn(
-                "_change_type", F.lit("delete")
-            ).select(*schema.fieldNames(), "_change_type")
-            if mapped:  # cdc parquet carries physical names
-                changes_all = _to_phys(
-                    changes_all, list(schema.fieldNames()), pfields,
-                    keep=("_change_type",),
-                )
-            cdc_tmp = os.path.join(table_path, f"_tmp-cdc-v{version}")
-            changes_all.write.mode("overwrite").parquet(cdc_tmp)
-            os.makedirs(
-                os.path.join(table_path, "_change_data"), exist_ok=True
+            cdc_actions = _write_cdc(
+                table_path, version,
+                deleted.withColumn("_change_type", F.lit("delete")),
+                schema.fieldNames(), pfields,
             )
-            for i, part in enumerate(
-                sorted(
-                    _glob.glob(os.path.join(cdc_tmp, "part-*.parquet"))
-                )
-            ):
-                rel = f"_change_data/cdc-{version:05d}-{i:04d}.parquet"
-                _put_data(part, os.path.join(table_path, rel))
-                cdc_rel.append(rel)
-            shutil.rmtree(cdc_tmp)
-        for rel in cdc_rel:
-            full = os.path.join(table_path, rel)
-            actions.append(
-                {
-                    "cdc": {
-                        "path": rel,
-                        "partitionValues": {},
-                        "size": os.path.getsize(full),
-                        "dataChange": False,
-                    }
-                }
-            )
+        actions += cdc_actions
         _commit(
             _log_dir(table_path), version, actions,
             operation="DELETE", operation_params={"mode": "deletion-vectors"},
@@ -4179,13 +3435,13 @@ def delete_delta_keys(
     # list (n / null-flag derived locally; _affected's key_list branch
     # never reads kmin/kmax). Only an over-cap key set pays the stats
     # aggregate, whose collected bytes stay O(1).
-    probe = kdf.limit(_MAX_DRIVER_KEYS + 1).collect()
+    probe = kdf.limit(MAX_DRIVER_KEYS + 1).collect()
     n_keys = len(probe)
     if n_keys == 0:
         return state["version"]
     key_list = None
     kmin = kmax = None
-    if n_keys <= _MAX_DRIVER_KEYS:
+    if n_keys <= MAX_DRIVER_KEYS:
         has_null = any(r[0] is None for r in probe)
         key_list = sorted(r[0] for r in probe if r[0] is not None)
     else:
@@ -4214,7 +3470,7 @@ def delete_delta_keys(
         pv = a.get("partitionValues") or {}
         pt = tuple(pv.get(phys(c)) for c in part_cols)
         e = _entry_from_add(p, a, phys(key_col))
-        h, _miss = _affected([e], key_list, kmin, kmax, has_null)
+        h, _miss = affected([e], key_list, kmin, kmax, has_null)
         if h:
             hits.append((p, pt))
             hit_rows_total += max(e["rows"], 0)
@@ -4242,28 +3498,11 @@ def delete_delta_keys(
     if single:
         cur = cur.withColumn("__pid", F.lit(0).cast("int")).alias("cur")
     else:
-        bn_pid_rows = [
-            (p.rsplit("/", 1)[-1], pid_of[pt]) for p, pt in hits
-        ]
-        if len({b for b, _ in bn_pid_rows}) != len(bn_pid_rows):
-            raise NotImplementedError(
-                "delta delete: affected files share a basename — the "
-                "pid routing join would misattribute rows"
-            )
-        rel_pid = local_rows_df(spark, 
-            bn_pid_rows,
-            T.StructType(
-                [
-                    T.StructField("__rel", T.StringType(), False),
-                    T.StructField("__pid", T.IntegerType(), False),
-                ]
-            ),
-        )
-        cur = (
-            cur.join(F.broadcast(rel_pid), "__rel", "inner")
-            .drop("__rel")
-            .alias("cur")
-        )
+        cur = route_files(
+            cur, "__rel",
+            [(p.rsplit("/", 1)[-1], pid_of[pt]) for p, pt in hits],
+            "delta delete",
+        ).alias("cur")
     nk = kdf.alias("nk")
     match = F.col(f"cur.{key_col}").eqNullSafe(F.col(f"nk.{key_col}"))
     keep = cur.join(nk, match, "left_anti")
@@ -4275,58 +3514,30 @@ def delete_delta_keys(
         ).withColumnRenamed("__rt_cv", rt[1])
 
     actions: list[dict] = []
-    new_adds: list[dict] = []
-    file_seq = 0
+    new_adds: list[tuple[str, dict]] = []
     n_files = max(1, -(-hit_rows_total // target_rows_per_file))
     tmp = os.path.join(table_path, f"_tmp-delete-v{version}")
     data_cols = [f.name for f in data_schema.fields]
-    if single:
-        out_df = keep.drop("__pid").repartitionByRange(
-            n_files, F.col(key_col)
+    pid_cols = () if single else ("__pid",)
+    out_df = (keep.drop("__pid") if single else keep).repartitionByRange(
+        n_files, *[F.col(c) for c in pid_cols], F.col(key_col)
+    )
+    if mapped:
+        out_df = _to_phys(
+            out_df, data_cols, pfields, keep=pid_cols + (rt or ())
         )
-        if mapped:
-            out_df = _to_phys(
-                out_df, data_cols, pfields,
-                keep=rt if rt is not None else (),
-            )
-        out_df.write.mode("overwrite").parquet(tmp)
-        pv = {phys(c): v for c, v in zip(part_cols, ptuples[0])}
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        ):
-            rel = (f"part-{version:05d}-{file_seq:04d}-"
-                    f"{_file_token(table_path)}-delete.parquet")
-            file_seq += 1
-            _put_data(part, os.path.join(table_path, rel))
-            new_adds.append({"path": rel, "partitionValues": pv})
-    else:
-        out_df = keep.repartitionByRange(
-            n_files, F.col("__pid"), F.col(key_col)
+    for file_seq, (pid, part) in enumerate(
+        write_by_pid(out_df, tmp, single)
+    ):
+        rel = (f"part-{version:05d}-{file_seq:04d}-"
+               f"{_file_token(table_path)}-delete.parquet")
+        _put_data(part, os.path.join(table_path, rel))
+        new_adds.append(
+            (rel, {phys(c): v for c, v in zip(part_cols, ptuples[pid])})
         )
-        if mapped:
-            out_df = _to_phys(
-                out_df, data_cols, pfields,
-                keep=("__pid", *rt) if rt is not None else ("__pid",),
-            )
-        (
-            out_df.write.partitionBy("__pid")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*"))):
-            pid = int(os.path.basename(pdir).split("=", 1)[1])
-            pv = {phys(c): v for c, v in zip(part_cols, ptuples[pid])}
-            for part in sorted(
-                _glob.glob(os.path.join(pdir, "part-*.parquet"))
-            ):
-                rel = (f"part-{version:05d}-{file_seq:04d}-"
-                    f"{_file_token(table_path)}-delete.parquet")
-                file_seq += 1
-                _put_data(part, os.path.join(table_path, rel))
-                new_adds.append({"path": rel, "partitionValues": pv})
     shutil.rmtree(tmp)
 
-    cdc_rel: list[str] = []
+    cdc_actions: list[dict] = []
     if change_data:
         deleted = cur.join(nk, match, "left_semi").withColumn(
             "_change_type", F.lit("delete")
@@ -4352,24 +3563,11 @@ def delete_delta_keys(
                 ],
             )
             deleted = deleted.join(F.broadcast(pid_typed), "__pid")
-        changes_all = deleted.select(*schema.fieldNames(), "_change_type")
-        if mapped:  # cdc parquet carries physical names, like data
-            changes_all = _to_phys(
-                changes_all, list(schema.fieldNames()), pfields,
-                keep=("_change_type",),
-            )
-        cdc_tmp = os.path.join(table_path, f"_tmp-cdc-v{version}")
-        changes_all.write.mode("overwrite").parquet(cdc_tmp)
-        os.makedirs(os.path.join(table_path, "_change_data"), exist_ok=True)
-        for i, part in enumerate(
-            sorted(_glob.glob(os.path.join(cdc_tmp, "part-*.parquet")))
-        ):
-            rel = f"_change_data/cdc-{version:05d}-{i:04d}.parquet"
-            _put_data(part, os.path.join(table_path, rel))
-            cdc_rel.append(rel)
-        shutil.rmtree(cdc_tmp)
+        cdc_actions = _write_cdc(
+            table_path, version, deleted, schema.fieldNames(), pfields
+        )
 
-    new_rel = [a["path"] for a in new_adds]
+    new_rel = [r for r, _ in new_adds]
     by_name = {}
     if new_rel:
         by_name = _collect_file_stats(
@@ -4378,28 +3576,11 @@ def delete_delta_keys(
         )
     if batch_id is not None:
         actions.append({"txn": {"appId": app_id, "version": batch_id}})
-    rt_base = _rt_high_watermark(state) + 1 if rt is not None else None
-    for pending in new_adds:
-        rel = pending["path"]
-        r = by_name.get(rel)
-        if r is None:  # all rows of the source files matched: no add
-            os.remove(os.path.join(table_path, rel))
-            continue
-        add = {
-            "path": rel,
-            "partitionValues": pending["partitionValues"],
-            "size": os.path.getsize(os.path.join(table_path, rel)),
-            "modificationTime": 0,
-            "dataChange": True,
-            "stats": json.dumps(r, default=str),
-        }
-        if rt is not None:
-            add["baseRowId"] = rt_base
-            add["defaultRowCommitVersion"] = version
-            rt_base += int(r["numRecords"])
-        actions.append({"add": add})
-    if rt is not None:
-        actions.append(_rt_domain_action(rt_base - 1))
+    actions += _add_actions(
+        table_path, new_adds, by_name, version,
+        _rt_high_watermark(state) + 1 if rt is not None else None,
+        data_change=True,
+    )
     for path in hit_paths:
         actions.append(
             {
@@ -4408,18 +3589,7 @@ def delete_delta_keys(
                 )
             }
         )
-    for rel in cdc_rel:
-        full = os.path.join(table_path, rel)
-        actions.append(
-            {
-                "cdc": {
-                    "path": rel,
-                    "partitionValues": {},
-                    "size": os.path.getsize(full),
-                    "dataChange": False,
-                }
-            }
-        )
+    actions += cdc_actions
     _commit(
         _log_dir(table_path), version, actions,
         operation="DELETE", operation_params={"mode": "copy-on-write"},

@@ -1,7 +1,8 @@
 """File-level MERGE upsert committing Apache Iceberg snapshots.
 
-The third target of the engine's copy-on-write MERGE core (after the
-JSON-manifest table and the Delta log): each merge appends an Iceberg
+The third target of the engine's copy-on-write MERGE core
+(``streaming/cow_merge.py``, shared with the JSON-manifest table and
+the Delta log): each merge appends an Iceberg
 snapshot in the v1 HadoopCatalog layout (iceberg.apache.org/spec) —
 read by :mod:`optimus_any2any_spark.sources.iceberg` and by any real
 Iceberg client that can open v1 tables. The reference engine has no
@@ -61,9 +62,8 @@ from optimus_any2any_spark.formats.avrobin import (
     write_container,
 )
 from optimus_any2any_spark.formats.footer_stats import (
-    footer_file_stats,
+    file_stats,
     kind_of_iceberg_type,
-    norm_float_zero,
 )
 from optimus_any2any_spark.sources.iceberg import (
     _localize,
@@ -86,9 +86,20 @@ from optimus_any2any_spark.sources.iceberg import (
 # mass delete (the spec allows many delete files per commit).
 _MAX_DELETE_FILE_ROWS = 5_000_000
 
-from optimus_any2any_spark.streaming.manifest_table import (
-    _MAX_DRIVER_KEYS,
-    _affected,
+from optimus_any2any_spark.streaming.cow_merge import (
+    MAX_DRIVER_KEYS,
+    affected,
+    apply_insert_clauses,
+    apply_merge_clauses,
+    batch_key_stats,
+    dedupe_latest,
+    pid_lookup,
+    route,
+    route_files,
+    upsert,
+    validate_merge_clauses,
+    with_zorder_value,
+    write_by_pid,
 )
 
 DEFAULT_APP_ID = "optimus-any2any-merge"
@@ -248,63 +259,24 @@ def _per_file_key_stats(
     just-written data files, for manifest ``record_count`` /
     ``lower_bounds`` / ``upper_bounds`` / ``null_value_counts``.
 
-    Fast path reads parquet FOOTER statistics driver-side (zero data
-    I/O — re-scanning merge output for stats would double write-path
-    I/O at scale; exactness contract in ``formats/footer_stats.py``);
-    fallback is ONE grouped Spark aggregate over all files. Zero-row
-    files are absent from the result either way (callers delete them).
+    The values come from ``footer_stats.file_stats`` (parquet footers,
+    one grouped Spark aggregate as the fallback); zero-row files are
+    absent from the result (callers delete them).
     """
-    ft = footer_file_stats(
-        [os.path.join(table_path, p) for p in new_rel],
-        [key_col] if key_col is not None else [],
-        {key_col: kind_of_iceberg_type(ice_t)} if key_col is not None else {},
-        session_tz=spark.conf.get("spark.sql.session.timeZone", "UTC"),
-    )
-    if ft is not None:
-        return {
-            name: {
-                "rows": s["rows"],
-                "min_key": s["min"].get(key_col),
-                "max_key": s["max"].get(key_col),
-                "n_null": s["nulls"].get(key_col, 0),
-            }
-            for name, s in ft.items()
-        }
-    reader = spark.read.parquet(
-        *[os.path.join(table_path, p) for p in new_rel]
-    )
-    if key_col is not None:
-        rows = (
-            reader.select(key_col)
-            .withColumn("__f", F.input_file_name())
-            .groupBy("__f")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.min(key_col).alias("min_key"),
-                F.max(key_col).alias("max_key"),
-                F.sum(F.col(key_col).isNull().cast("long")).alias("n_null"),
-            )
-            .collect()
-        )
-    else:
-        rows = (
-            reader.withColumn("__f", F.input_file_name())
-            .groupBy("__f")
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
+    cols = [key_col] if key_col is not None else []
     return {
-        r["__f"].rsplit("/", 1)[-1]: {
-            "rows": int(r["rows"]),
-            "min_key": norm_float_zero(r["min_key"])
-            if key_col is not None
-            else None,
-            "max_key": norm_float_zero(r["max_key"])
-            if key_col is not None
-            else None,
-            "n_null": int(r["n_null"]) if key_col is not None else 0,
+        name: {
+            "rows": st["rows"],
+            "min_key": st["min"].get(key_col),
+            "max_key": st["max"].get(key_col),
+            "n_null": st["nulls"].get(key_col, 0),
         }
-        for r in rows
+        for name, st in file_stats(
+            spark,
+            [os.path.join(table_path, p) for p in new_rel],
+            cols,
+            {c: kind_of_iceberg_type(ice_t) for c in cols},
+        ).items()
     }
 
 
@@ -424,6 +396,22 @@ def _parse_pspec(
     return pspec
 
 
+def _pv_pid_lookup(spark: SparkSession, ptuples: list, pspec: list[dict]):
+    """The pid lookup over a spec's transformed partition values, the
+    ``__pv<i>`` columns the writers compute per row."""
+    from optimus_any2any_spark.sources.iceberg_transforms import (
+        spark_type_of_result,
+    )
+
+    return pid_lookup(
+        spark, ptuples,
+        T.StructType.fromDDL(", ".join(
+            f"__pv{i} {spark_type_of_result(p['res_type'])}"
+            for i, p in enumerate(pspec)
+        )),
+    )
+
+
 def _current_schema_fields(meta: dict) -> dict[int, dict]:
     if "schemas" in meta:
         sid = meta.get("current-schema-id", 0)
@@ -485,8 +473,6 @@ def merge_iceberg_batch(
     manifest partition tuples carry the TRANSFORMED values keyed by
     the spec's field names. Unknown transforms and non-primitive
     partition sources are rejected, not mis-read."""
-    from pyspark.sql.window import Window
-
     md = _meta_dir(table_path)
     hint = os.path.join(md, "version-hint.text")
     exists = os.path.exists(hint)
@@ -526,7 +512,6 @@ def merge_iceberg_batch(
 
     from optimus_any2any_spark.sources.iceberg_transforms import (
         avro_type_of_result,
-        spark_type_of_result,
         transform_column,
     )
 
@@ -538,9 +523,8 @@ def merge_iceberg_batch(
     # decides which rows share a tuple.
     pspec = _parse_pspec(default_spec, by_id, "merge")
     part_names = [p["name"] for p in pspec]
-    # conditional clause surface (VERDICT r9 item 5's Delta twin —
-    # the row algebra is format-agnostic and shared with
-    # streaming/delta_table.py): ordered ("update"|"delete", cond,
+    # conditional clause surface (the row algebra is format-agnostic,
+    # streaming/cow_merge.py): ordered ("update"|"delete", cond,
     # set) matched / not-matched-by-source clauses plus ("insert",
     # cond, values) not-matched clauses; first match wins, t./s.
     # references; unmatched source rows insert-all unless
@@ -551,11 +535,7 @@ def merge_iceberg_batch(
         or when_not_matched is not None
     )
     if conditional:
-        from optimus_any2any_spark.streaming.delta_table import (
-            _validate_merge_clauses,
-        )
-
-        _validate_merge_clauses(
+        validate_merge_clauses(
             when_matched, when_not_matched_by_source, key_col,
             when_not_matched=when_not_matched,
         )
@@ -695,36 +675,8 @@ def merge_iceberg_batch(
     # the dedupe window and every partition-scoped step below key on
     # the TRANSFORMED partition values (__pv*), computed once here and
     # pinned by the checkpoint — identity specs make them plain copies
-    w = Window.partitionBy(key_col, *pv_cols).orderBy(
-        F.col(ts_col).desc()
-    )
-    latest = (
-        _with_pvs(batch)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint(eager=False)
-    )
-    # the grouped key-stats aggregate doubles as the checkpoint's
-    # materializer AND yields n_total (sum of per-partition n) — the
-    # old shape ran a separate full count job first. Exact key LISTS
-    # (the sharper per-partition file pruner) are recovered by one
-    # extra collect only when the batch fits the driver cap, where
-    # that collect is cheap; an over-cap backfill commit saves a
-    # whole pass.
-    gstats = (
-        latest.groupBy(*pv_cols)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(key_col).alias("kmin"),
-            F.max(key_col).alias("kmax"),
-            F.max(F.col(key_col).isNull().cast("int")).alias(
-                "null_key"
-            ),
-        )
-        .collect()
-    )
-    n_total = sum(int(r["n"]) for r in gstats)
+    latest = dedupe_latest(_with_pvs(batch), key_col, ts_col, pv_cols)
+    n_total, pstats, _rows = batch_key_stats(latest, key_col, pv_cols)
     if n_total == 0 and not when_not_matched_by_source:
         # (an EMPTY source with when_not_matched_by_source is still a
         # full clause evaluation: every live row is unmatched)
@@ -748,45 +700,6 @@ def merge_iceberg_batch(
         os.replace(tmph, hint)
         return version
 
-    # per-partition batch key stats: ONE job for ALL touched
-    # partitions (mirrors merge_delta_batch)
-    if n_total <= _MAX_DRIVER_KEYS:
-        krows = latest.select(*pv_cols, key_col).collect()
-        grouped: dict[tuple, list] = {}
-        for r in krows:
-            grouped.setdefault(
-                tuple(r[c] for c in pv_cols), []
-            ).append(r[key_col])
-        pstats: dict[tuple, dict] = {}
-        for pt, vals in grouped.items():
-            nn = sorted(v for v in vals if v is not None)
-            pstats[pt] = {
-                "n": len(vals),
-                "keys": nn,
-                "kmin": nn[0] if nn else None,
-                "kmax": nn[-1] if nn else None,
-                "has_null": len(nn) < len(vals),
-            }
-    else:
-        pstats = {
-            tuple(r[c] for c in pv_cols): {
-                "n": r["n"],
-                "keys": None,
-                "kmin": r["kmin"],
-                "kmax": r["kmax"],
-                "has_null": bool(r["null_key"]),
-            }
-            for r in gstats
-            if r["n"]
-        }
-    if when_not_matched_by_source and not pstats and not pspec:
-        # empty source, unpartitioned: the clause pass still routes
-        # through the one () partition (partitioned tables mint their
-        # pids from the affected rows' transform tuples below)
-        pstats = {
-            (): {"n": 0, "keys": [], "kmin": None, "kmax": None,
-                 "has_null": False}
-        }
     ptuples = sorted(pstats, key=str)
     pid_of = {pt: i for i, pt in enumerate(ptuples)}
 
@@ -933,7 +846,7 @@ def merge_iceberg_batch(
             else:
                 st = pstats[()]
             shaped = _entry_to_prune_shape(e, fid, ice_t)
-            h, _m = _affected(
+            h, _m = affected(
                 [shaped], st["keys"], st["kmin"], st["kmax"],
                 st["has_null"],
             )
@@ -1090,45 +1003,13 @@ def merge_iceberg_batch(
     # One touched partition (incl. every unpartitioned merge) skips
     # the routing AND the dynamic-partition write below.
     single = len(ptuples) == 1
+    pid_df = None
     if pspec and not single:
-        pid_ddl = ", ".join(
-            f"{pv_cols[i]} {spark_type_of_result(pspec[i]['res_type'])}"
-            for i in range(len(pspec))
-        )
-        pid_df = local_rows_df(spark, 
-            [pt + (pid_of[pt],) for pt in ptuples],
-            f"{pid_ddl}, __pid int",
-        )
-        pcond = None
-        for c in pv_cols:
-            e = F.col(f"b.{c}").eqNullSafe(F.col(f"pd.{c}"))
-            pcond = e if pcond is None else (pcond & e)
-
-        def _with_pid(frame):
-            # frame must carry the __pv* columns; the select drops
-            # them — data files keep exactly the table schema (plus
-            # the materialized lineage columns when present)
-            extra = [
-                c
-                for c in ("_row_id", "_last_updated_sequence_number")
-                if c in frame.columns
-            ]
-            return (
-                frame.alias("b")
-                .join(F.broadcast(pid_df.alias("pd")), pcond, "inner")
-                .select(
-                    *[F.col(f"b.{c}") for c in schema.fieldNames()],
-                    *[F.col(f"b.{c}") for c in extra],
-                    F.col("pd.__pid"),
-                )
-            )
-
-        latest_p = _with_pid(latest)
-    else:
-        _with_pid = None
-        latest_p = latest.drop(*pv_cols).withColumn(
-            "__pid", F.lit(0).cast("int")
-        )
+        pid_df = _pv_pid_lookup(spark, ptuples, pspec)
+    # data files keep exactly the table schema (plus the materialized
+    # lineage columns when present): routing drops the __pv* columns
+    lineage_cols = ("_row_id", "_last_updated_sequence_number")
+    latest_p = route(latest, schema.fieldNames(), pv_cols, pid_df)
 
     merged = latest_p
     hit_rows = 0
@@ -1139,71 +1020,23 @@ def merge_iceberg_batch(
         # (cur0 is the same frame, already built for the evolved-table
         # pid extension above)
         cur = cur0 if cur0 is not None else _read_hit_files()
-        cur_p = (
-            _with_pid(_with_pvs(cur))
-            if _with_pid is not None
-            else cur.withColumn("__pid", F.lit(0).cast("int"))
+        cur_p = route(
+            cur if pid_df is None else _with_pvs(cur),
+            schema.fieldNames()
+            + [c for c in lineage_cols if c in cur.columns],
+            pv_cols,
+            pid_df,
         )
+        carry = lineage_cols if lineage else None
         if conditional:
-            from optimus_any2any_spark.streaming.delta_table import (
-                _apply_merge_clauses,
-            )
-
-            merged, _ = _apply_merge_clauses(
+            merged, _ = apply_merge_clauses(
                 cur_p, latest_p, key_col, list(schema.fieldNames()),
                 when_matched, when_not_matched_by_source,
                 when_not_matched=when_not_matched,
-                carry_cols=(
-                    ("_row_id", "_last_updated_sequence_number")
-                    if lineage
-                    else None
-                ),
+                carry_cols=carry,
             )
         else:
-            bk = latest_p.select(
-                F.col(key_col).alias("__bk"),
-                F.col("__pid").alias("__bpid"),
-            )
-            batch_side = latest_p
-            if lineage:
-                # the update contract: a batch row replacing a
-                # matched target row KEEPS that row's id; its
-                # sequence derives fresh (null materialized → the
-                # new file's data sequence). Unmatched rows insert
-                # with null id (fresh from first_row_id + position).
-                cur_ids = cur_p.select(
-                    F.col(key_col).alias("__ck"),
-                    F.col("__pid").alias("__cpid"),
-                    F.col("_row_id").alias("__rl_prev"),
-                )
-                m2 = F.col(f"b.{key_col}").eqNullSafe(
-                    F.col("__ck")
-                ) & (F.col("b.__pid") == F.col("__cpid"))
-                batch_side = (
-                    latest_p.alias("b")
-                    .join(cur_ids, m2, "left")
-                    .select(
-                        *[
-                            F.col(f"b.{c}")
-                            for c in schema.fieldNames()
-                        ],
-                        F.col("__rl_prev").alias("_row_id"),
-                        F.lit(None)
-                        .cast("long")
-                        .alias("_last_updated_sequence_number"),
-                        F.col("b.__pid"),
-                    )
-                )
-            merged = (
-                cur_p.alias("cur")
-                .join(
-                    bk,
-                    F.col(f"cur.{key_col}").eqNullSafe(F.col("__bk"))
-                    & (F.col("cur.__pid") == F.col("__bpid")),
-                    "left_anti",
-                )
-                .unionByName(batch_side)
-            )
+            merged = upsert(cur_p, latest_p, key_col, carry_cols=carry)
         hit_rows = sum(
             int(e["data_file"]["record_count"]) for e in hit_entries
         )
@@ -1211,11 +1044,7 @@ def merge_iceberg_batch(
     if conditional and when_not_matched is not None and not hit_entries:
         # no affected files: every batch row is unmatched — the
         # insert clauses still decide which rows (and values) land
-        from optimus_any2any_spark.streaming.delta_table import (
-            _apply_insert_clauses,
-        )
-
-        merged = _apply_insert_clauses(
+        merged = apply_insert_clauses(
             latest_p, list(schema.fieldNames()),
             {f.name: f.dataType for f in schema.fields},
             when_not_matched,
@@ -1227,41 +1056,19 @@ def merge_iceberg_batch(
     os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
     new_rel: list[str] = []
     pt_of_rel: dict[str, tuple] = {}
-    file_seq = 0
-    if single:
-        (
-            merged.drop("__pid")
-            .repartitionByRange(n_files, F.col(key_col))
-            .write.mode("overwrite")
-            .parquet(tmp)
+    pid_cols = [] if single else [F.col("__pid")]
+    for file_seq, (pid, part) in enumerate(
+        write_by_pid(
+            (merged.drop("__pid") if single else merged)
+            .repartitionByRange(n_files, *pid_cols, F.col(key_col)),
+            tmp,
+            single,
         )
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        ):
-            rel = f"data/{version:05d}-{file_seq:04d}-merge.parquet"
-            file_seq += 1
-            os.replace(part, os.path.join(table_path, rel))
-            new_rel.append(rel)
-            pt_of_rel[rel] = ptuples[0]
-    else:
-        (
-            merged.repartitionByRange(
-                n_files, F.col("__pid"), F.col(key_col)
-            )
-            .write.partitionBy("__pid")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*"))):
-            pid = int(os.path.basename(pdir).split("=", 1)[1])
-            for part in sorted(
-                _glob.glob(os.path.join(pdir, "part-*.parquet"))
-            ):
-                rel = f"data/{version:05d}-{file_seq:04d}-merge.parquet"
-                file_seq += 1
-                os.replace(part, os.path.join(table_path, rel))
-                new_rel.append(rel)
-                pt_of_rel[rel] = ptuples[pid]
+    ):
+        rel = f"data/{version:05d}-{file_seq:04d}-merge.parquet"
+        os.replace(part, os.path.join(table_path, rel))
+        new_rel.append(rel)
+        pt_of_rel[rel] = ptuples[pid]
     shutil.rmtree(tmp)
 
     per_file = (
@@ -1730,11 +1537,11 @@ def delete_iceberg_positions(
     # key set fit" and, when it does, yields the rows to derive
     # n/kmin/kmax locally (NaN ordered greatest, exactly Spark's
     # float ordering). Only an over-cap key set pays the aggregate.
-    probe = kdf.limit(_MAX_DRIVER_KEYS + 1).collect()
+    probe = kdf.limit(MAX_DRIVER_KEYS + 1).collect()
     n_keys = len(probe)
     if n_keys == 0:
         return prev_version
-    if n_keys <= _MAX_DRIVER_KEYS:
+    if n_keys <= MAX_DRIVER_KEYS:
         nonnull = [r[0] for r in probe if r[0] is not None]
         ordk = lambda v: (isinstance(v, float) and v != v, v)  # noqa: E731
         kmin = min(nonnull, key=ordk) if nonnull else None
@@ -1760,7 +1567,7 @@ def delete_iceberg_positions(
     )
     matching = (
         cur.join(F.broadcast(kdf), key_col, "left_semi")
-        if n_keys <= _MAX_DRIVER_KEYS
+        if n_keys <= MAX_DRIVER_KEYS
         else cur.join(kdf, key_col, "left_semi")
     ).select(
         F.col("__del_fp").alias("file_path"),
@@ -2248,7 +2055,6 @@ def update_iceberg_where(
     )
     from optimus_any2any_spark.sources.iceberg_transforms import (
         avro_type_of_result,
-        spark_type_of_result,
         transform_column,
     )
 
@@ -2363,64 +2169,21 @@ def update_iceberg_where(
     tmp = os.path.join(table_path, f"_tmp-updwhere-v{version}")
     new_rel: list[str] = []
     pt_of_rel: dict[str, tuple] = {}
-    file_seq = 0
-    if single:
-        (
-            upd_pv.drop(*pv_cols)
-            .repartitionByRange(n_files, F.col(first_col))
-            .write.mode("overwrite")
-            .parquet(tmp)
+    pid_df = None if single else _pv_pid_lookup(spark, ptuples, pspec)
+    routed = route(upd_pv, schema.fieldNames(), pv_cols, pid_df)
+    pid_cols = [] if single else [F.col("__pid")]
+    for file_seq, (pid, part) in enumerate(
+        write_by_pid(
+            (routed.drop("__pid") if single else routed)
+            .repartitionByRange(n_files, *pid_cols, F.col(first_col)),
+            tmp,
+            single,
         )
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        ):
-            rel = f"data/{version:05d}-{file_seq:04d}-update.parquet"
-            file_seq += 1
-            os.replace(part, os.path.join(table_path, rel))
-            new_rel.append(rel)
-            pt_of_rel[rel] = ptuples[0]
-    else:
-        pid_of = {pt: i for i, pt in enumerate(ptuples)}
-        pid_ddl = ", ".join(
-            f"{pv_cols[i]} {spark_type_of_result(pspec[i]['res_type'])}"
-            for i in range(len(pspec))
-        )
-        pid_df = local_rows_df(spark, 
-            [pt + (pid_of[pt],) for pt in ptuples],
-            f"{pid_ddl}, __pid int",
-        )
-        pcond = None
-        for c in pv_cols:
-            e = F.col(f"b.{c}").eqNullSafe(F.col(f"pd.{c}"))
-            pcond = e if pcond is None else (pcond & e)
-        routed = (
-            upd_pv.alias("b")
-            .join(F.broadcast(pid_df.alias("pd")), pcond, "inner")
-            .select(
-                *[F.col(f"b.{c}") for c in schema.fieldNames()],
-                F.col("pd.__pid"),
-            )
-        )
-        (
-            routed.repartitionByRange(
-                n_files, F.col("__pid"), F.col(first_col)
-            )
-            .write.partitionBy("__pid")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*"))):
-            pid = int(os.path.basename(pdir).split("=", 1)[1])
-            for part in sorted(
-                _glob.glob(os.path.join(pdir, "part-*.parquet"))
-            ):
-                rel = (
-                    f"data/{version:05d}-{file_seq:04d}-update.parquet"
-                )
-                file_seq += 1
-                os.replace(part, os.path.join(table_path, rel))
-                new_rel.append(rel)
-                pt_of_rel[rel] = ptuples[pid]
+    ):
+        rel = f"data/{version:05d}-{file_seq:04d}-update.parquet"
+        os.replace(part, os.path.join(table_path, rel))
+        new_rel.append(rel)
+        pt_of_rel[rel] = ptuples[pid]
     shutil.rmtree(tmp)
 
     per_file = (
@@ -2503,70 +2266,6 @@ def update_iceberg_where(
     )
 
 
-def _per_file_multi_stats(
-    spark: SparkSession,
-    table_path: str,
-    new_rel: list[str],
-    cols: list[tuple[str, str]],  # (name, iceberg type)
-) -> dict[str, dict]:
-    """Per-basename ``{"rows", cols: {name: (min, max, nulls)}}`` over
-    just-written files for SEVERAL stat columns (the ZORDER set needs
-    bounds on every dimension or the clustering cannot prune). Footer
-    fast path, one grouped Spark aggregate as the fallback."""
-    ft = footer_file_stats(
-        [os.path.join(table_path, p) for p in new_rel],
-        [n for n, _ in cols],
-        {n: kind_of_iceberg_type(t) for n, t in cols},
-        session_tz=spark.conf.get("spark.sql.session.timeZone", "UTC"),
-    )
-    if ft is not None:
-        return {
-            name: {
-                "rows": s["rows"],
-                "cols": {
-                    n: (
-                        s["min"].get(n),
-                        s["max"].get(n),
-                        s["nulls"].get(n, 0),
-                    )
-                    for n, _ in cols
-                },
-            }
-            for name, s in ft.items()
-        }
-    aggs = [F.count(F.lit(1)).alias("rows")]
-    for n, _ in cols:
-        aggs += [
-            F.min(n).alias(f"__mn_{n}"),
-            F.max(n).alias(f"__mx_{n}"),
-            F.sum(F.col(n).isNull().cast("long")).alias(f"__nn_{n}"),
-        ]
-    rows = (
-        spark.read.parquet(
-            *[os.path.join(table_path, p) for p in new_rel]
-        )
-        .select(*[n for n, _ in cols])
-        .withColumn("__f", F.input_file_name())
-        .groupBy("__f")
-        .agg(*aggs)
-        .collect()
-    )
-    return {
-        r["__f"].rsplit("/", 1)[-1]: {
-            "rows": int(r["rows"]),
-            "cols": {
-                n: (
-                    norm_float_zero(r[f"__mn_{n}"]),
-                    norm_float_zero(r[f"__mx_{n}"]),
-                    int(r[f"__nn_{n}"]),
-                )
-                for n, _ in cols
-            },
-        }
-        for r in rows
-    }
-
-
 def compact_iceberg(
     spark: SparkSession,
     table_path: str,
@@ -2594,13 +2293,13 @@ def compact_iceberg(
     ``rewrite_data_files``: EVERY live default-spec file rewrites
     (partition evolution still carries old-spec manifests whole),
     routed on the shared Morton key over quantile buckets
-    (``streaming/delta_table._with_zorder_value`` — the row algebra
-    is format-agnostic), and the manifest entries record Appendix-D
-    lower/upper bounds for EVERY z-ordered column so
-    ``read_iceberg(key_range=...)`` prunes on any of them. Identity
-    partition sources refuse (files never span identity partitions);
-    transform sources (days/bucket/truncate) z-order fine — the
-    within-partition residual is exactly what the curve tightens.
+    (``streaming/cow_merge.with_zorder_value``), and the manifest
+    entries record Appendix-D lower/upper bounds for EVERY z-ordered
+    column so ``read_iceberg(key_range=...)`` prunes on any of them.
+    Identity partition sources refuse (files never span identity
+    partitions); transform sources (days/bucket/truncate) z-order fine
+    — the within-partition residual is exactly what the curve
+    tightens.
     The snapshot summary records ``zorder-by``."""
     from optimus_any2any_spark.sources.iceberg import (
         read_entries_with_deletes,
@@ -2911,26 +2610,13 @@ def compact_iceberg(
             )
             .drop("__rl_fp", "__rl_pos", "__rl_first", "__rl_seq")
         )
-    bn_pid = [
-        (e["data_file"]["file_path"].rsplit("/", 1)[-1], pid)
-        for e, pid in zip(hit_entries, hit_pids)
-    ]
-    if len({b for b, _ in bn_pid}) != len(bn_pid):
-        raise NotImplementedError(
-            "iceberg optimize: compacted files share a basename"
-        )
     n_files = max(1, -(-max(total_rows, 1) // target_rows_per_file))
     tmp = os.path.join(table_path, f"_tmp-icecompact-v{version}")
     os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
     new_rel: list[str] = []
     pt_of_rel: dict[str, tuple] = {}
-    file_seq = 0
     if zorder_by:
-        from optimus_any2any_spark.streaming.delta_table import (
-            _with_zorder_value,
-        )
-
-        cur = _with_zorder_value(cur, zorder_by, schema)
+        cur = with_zorder_value(cur, zorder_by, schema)
         sort_cols = [F.col("__zv")]
     else:
         sort_cols = [F.col(key_col)] if key_col is not None else []
@@ -2946,21 +2632,14 @@ def compact_iceberg(
             # the declared sort order must be TRUE within each file,
             # not an artifact of range-partition concatenation
             out_df = out_df.sortWithinPartitions(key_col)
-        out_df.write.mode("overwrite").parquet(tmp)
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        ):
-            rel = f"data/{version:05d}-{file_seq:04d}-compact.parquet"
-            file_seq += 1
-            os.replace(part, os.path.join(table_path, rel))
-            new_rel.append(rel)
-            pt_of_rel[rel] = ptuples[0]
     else:
-        pid_lk = local_rows_df(spark, 
-            bn_pid, "__bn string, __pid int"
-        )
-        cur = cur.join(F.broadcast(pid_lk), "__bn", "inner").drop(
-            "__bn"
+        cur = route_files(
+            cur, "__bn",
+            [
+                (e["data_file"]["file_path"].rsplit("/", 1)[-1], pid)
+                for e, pid in zip(hit_entries, hit_pids)
+            ],
+            "iceberg optimize",
         )
         out_df = cur.repartitionByRange(
             n_files, F.col("__pid"), *sort_cols
@@ -2971,24 +2650,13 @@ def compact_iceberg(
             ).drop("__zv")
         elif key_col is not None:
             out_df = out_df.sortWithinPartitions("__pid", key_col)
-        (
-            out_df
-            .write.partitionBy("__pid")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*"))):
-            pid = int(os.path.basename(pdir).split("=", 1)[1])
-            for part in sorted(
-                _glob.glob(os.path.join(pdir, "part-*.parquet"))
-            ):
-                rel = (
-                    f"data/{version:05d}-{file_seq:04d}-compact.parquet"
-                )
-                file_seq += 1
-                os.replace(part, os.path.join(table_path, rel))
-                new_rel.append(rel)
-                pt_of_rel[rel] = ptuples[pid]
+    for file_seq, (pid, part) in enumerate(
+        write_by_pid(out_df, tmp, single)
+    ):
+        rel = f"data/{version:05d}-{file_seq:04d}-compact.parquet"
+        os.replace(part, os.path.join(table_path, rel))
+        new_rel.append(rel)
+        pt_of_rel[rel] = ptuples[pid]
     shutil.rmtree(tmp)
 
     if not new_rel:
@@ -2996,9 +2664,11 @@ def compact_iceberg(
     elif zorder_by:
         # bounds for EVERY z-ordered column — without them the curve
         # cannot prune anything
-        per_file = _per_file_multi_stats(
-            spark, table_path, new_rel,
-            [(n, it_) for n, _f, it_ in stat_fields],
+        per_file = file_stats(
+            spark,
+            [os.path.join(table_path, p) for p in new_rel],
+            [n for n, _f, _it in stat_fields],
+            {n: kind_of_iceberg_type(it_) for n, _f, it_ in stat_fields},
         )
     else:
         per_file = _per_file_key_stats(
@@ -3065,7 +2735,7 @@ def compact_iceberg(
         if zorder_by:
             nvc, lb, ub = [], [], []
             for n, c_fid, c_it in stat_fields:
-                mn, mx, nn = r["cols"][n]
+                mn, mx, nn = r["min"].get(n), r["max"].get(n), r["nulls"][n]
                 nvc.append(
                     {"key": c_fid, "value": struct.pack("<q", int(nn))}
                 )

@@ -22,6 +22,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from optimus_any2any_spark.streaming.cow_merge import (
+    dedupe_latest,
+    latest_per_key,
+)
+
 
 def stream_source(
     spark: SparkSession,
@@ -163,18 +168,12 @@ def upsert_to_parquet(
     format (Delta/Iceberg MERGE) turns it into a file-level upsert; the
     plan shape (dedup-in-batch, anti-join, union) is identical.
     """
-    from pyspark.sql.window import Window
 
     def merge(batch: DataFrame, _batch_id: int):
         if batch.isEmpty():
             return
         spark = batch.sparkSession
-        w = Window.partitionBy(key_col).orderBy(F.col(ts_col).desc())
-        latest = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        latest = latest_per_key(batch, key_col, ts_col)
         # Only a genuinely-absent snapshot may fall back to merged=latest:
         # swallowing arbitrary read errors here would let one transient
         # failure overwrite the snapshot with a single micro-batch,
@@ -272,8 +271,6 @@ def upsert_to_parquet_partitioned(
     identical content), so foreachBatch redelivery upgrades to
     effectively-once.
     """
-    from pyspark.sql.window import Window
-
     staging = path + "__staging"
 
     def bucket_of(col: Column) -> Column:
@@ -320,13 +317,12 @@ def upsert_to_parquet_partitioned(
 
         if batch.isEmpty():
             return
-        w = Window.partitionBy(key_col).orderBy(F.col(ts_col).desc())
-        latest = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-            .withColumn("bucket", bucket_of(F.col(key_col)))
-            .localCheckpoint(eager=False)
+        # the bucket is a function of the key, so computing it before
+        # the dedupe leaves the latest-row choice unchanged
+        latest = dedupe_latest(
+            batch.withColumn("bucket", bucket_of(F.col(key_col))),
+            key_col,
+            ts_col,
         )
         affected = [r["bucket"] for r in latest.select("bucket").distinct().collect()]
         if fs.exists(jpath):
@@ -370,21 +366,6 @@ def upsert_to_parquet_partitioned(
         stream.writeStream.foreachBatch(merge)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
-        .start()
-    )
-
-
-def kafka_stream_sink(
-    df: DataFrame, bootstrap_servers: str, topic: str, checkpoint: str
-):
-    """Streaming Kafka producer (the reference's Kafka sink is batch
-    produce-only — ext/kafka/sink.go:21; this is the continuous twin)."""
-    payload = df.select(F.to_json(F.struct(*df.columns)).alias("value"))
-    return (
-        payload.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
         .start()
     )
 

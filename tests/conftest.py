@@ -21,6 +21,15 @@ TABLES = [
 ]
 
 
+def pytest_configure(config):
+    # Per-test duration log (--durations=30 --durations-min=5) unless
+    # the command line asks for its own: the slowest tests show in the
+    # run's tail, so a long suite reports where its time went.
+    if config.option.durations is None:
+        config.option.durations = 30
+        config.option.durations_min = 5.0
+
+
 @pytest.fixture(scope="session")
 def spark():
     from optimus_any2any_spark.session import get_spark
